@@ -64,7 +64,7 @@ object GraftSession {
       // 174× (spilling sort-merge verify join) with fixed partitions.
       // The START width itself is INPUT-DERIVED (r13, guide §2 "make
       // partitioning scale-adaptive / derive from input size"): ~1
-      // initial partition per MB of input (clamped to [cpus, 4096]) —
+      // initial partition per MB of input (clamped to [cpus*2, 4096]) —
       // the 1 MB/partition target is deliberate post-explode headroom
       // (tokenize/shingle intermediates run 10–100× input in this
       // workload), and AQE still coalesces DOWN from it by measured

@@ -380,6 +380,42 @@ object Dedup {
     HashExprs.minhashSig(
       array_distinct(TextFunctions.tokenize(lower(textCol))), k)
 
+  /** One MinHash/LSH sketch per document from ONE tokenization:
+    * (doc_id, bk, toks) — `bk` the per-band LSH bucket keys
+    * ([[graft.functions.MinHashBuckets]], band-salted so cross-band
+    * collisions are impossible), `toks` the sorted xxhash64 set of the
+    * non-blank tokens, the exact-Jaccard verification payload, so a
+    * per-pair intersection is a two-pointer merge over primitive longs (at
+    * 3M pairs × ~50 tokens the chance of a 64-bit collision moving a
+    * Jaccard count is ~1e-9). The blank token stays in `bk` and out of
+    * `toks`.
+    * The token array is its own projection, so both columns read one
+    * `array_distinct(tokenize(lower(text)))` (CollapseProject does not
+    * inline a non-trivial expression that is read twice). A native kernel
+    * for `toks` in place of the `transform` lambda saved ~2% task CPU on
+    * the perfbench dedup corpus and no wall time, so it was not kept.
+    */
+  private def minhashSketch(
+      docs: DataFrame, idCol: String, textCol: String,
+      bands: Int, rowsPerBand: Int): DataFrame =
+    docs
+      .select(col(idCol).as("doc_id"),
+        array_distinct(TextFunctions.tokenize(lower(col(textCol)))).as("t"))
+      .select(col("doc_id"),
+        HashExprs.minhashBuckets(col("t"), bands, rowsPerBand).as("bk"),
+        sort_array(transform(filter(col("t"), t => length(t) > 0),
+          t => xxhash64(t))).as("toks"))
+
+  /** (doc_id, band, bucket, bk) rows of a sketch, one per band. Outer
+    * explode: `bk` always has exactly `bands` elements, and the non-outer
+    * Generate re-evaluates the sketch inside its pushed-down size>0 /
+    * notnull guards (3 sketch evaluations per row instead of 1).
+    */
+  private def explodeBuckets(sketch: DataFrame): DataFrame =
+    sketch.select(col("doc_id"), posexplode_outer(col("bk")), col("bk"))
+      .withColumnRenamed("pos", "band")
+      .withColumnRenamed("col", "bucket")
+
   /** LSH banding: one bucket key per band, computed inside the same native
     * expression as the signature ([[graft.functions.MinHashBuckets]]).
     * Docs sharing any bucket are candidates. Returns (doc_id, band, bucket).
@@ -387,17 +423,63 @@ object Dedup {
   def lshBuckets(
       docs: DataFrame, idCol: String, textCol: String,
       bands: Int, rowsPerBand: Int): DataFrame =
-    docs
-      .select(col(idCol).as("doc_id"),
-        HashExprs.minhashBuckets(
-          array_distinct(TextFunctions.tokenize(lower(col(textCol)))),
-          bands, rowsPerBand).as("bk"))
-      // outer explode: `bk` always has exactly `bands` elements, and the
-      // non-outer Generate re-evaluates the sketch inside its pushed-down
-      // size>0 / notnull guards (3 sketch evaluations per row instead of 1)
-      .select(col("doc_id"), posexplode_outer(col("bk")))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bucket")
+    explodeBuckets(minhashSketch(docs, idCol, textCol, bands, rowsPerBand))
+      .drop("bk")
+
+  /** MinHash+LSH candidate pairs, each pair once: (id_a, id_b, toks_a,
+    * toks_b) with id_a < id_b, carrying both docs' sorted token-hash sets
+    * for exact verification.
+    *
+    * Candidates come from a self-join of per-band rows on (bucket, band).
+    * A row carries only the buckets of the bands BEFORE its own (`pfx` =
+    * bk[0..band-1], half the array on average; never the token set), and
+    * a pair colliding in several bands is kept only at its first colliding
+    * band: no earlier band agrees, `first_eq_index(pfx_x, pfx_y) == -1`.
+    * That filter runs inside the join, before any further exchange: on the
+    * dup-heavy sf0.1 fixture the band join emits 92.3M colliding pairs for
+    * 10.2M distinct candidates, so filtering after the token-set joins
+    * pushed 9× the rows through both of them (dd03 +14%, local[4]).
+    *
+    * The exchange is an explicit numbered repartition at the session
+    * parallelism, read by both join sides: its rows are small, and the
+    * pair expansion in a hot bucket is quadratic (work ≠ bytes, as in
+    * [[pairCounts]]). The join strategy is left to AQE, which picks a
+    * sort-merge join at these sizes. `bucket` is the FIRST key because
+    * the sort prefix holds the first key only: `band` has just `bands`
+    * distinct values, and (band, bucket) order sent nearly every
+    * comparison to a full row compare (perfbench dedup task CPU ~2.2 s
+    * against ~1.5 s). A forced shuffled hash join held 16 MB per task
+    * instead of 52 MB on the 8,000-doc perfbench corpus, where 94% of
+    * (band, bucket) groups are singletons, but on the sf0.1 fixture
+    * (5,000 docs, 97% of rows in shared buckets, largest bucket 2,707
+    * docs) it made dd03 about a third slower than the sort-merge join.
+    *
+    * The token sets join back on the two ids through one sketch subplan,
+    * so the second side reuses the first side's exchange (or broadcast).
+    * Null texts sketch to a null `bk`, whose outer-explode row has a null
+    * bucket and never equi-joins. Doc ids are keys.
+    */
+  def minhashCandidates(
+      docs: DataFrame,
+      idCol: String = "doc_id",
+      textCol: String = "text",
+      bands: Int = 32,
+      rowsPerBand: Int = 4): DataFrame = {
+    val sketch = minhashSketch(docs, idCol, textCol, bands, rowsPerBand)
+    val b = explodeBuckets(sketch)
+      .select(col("doc_id"), col("band"), col("bucket"),
+        slice(col("bk"), lit(1), col("band")).as("pfx"))
+      .repartition(docs.sparkSession.sparkContext.defaultParallelism,
+        col("bucket"), col("band"))
+    b.as("x")
+      .join(b.as("y"),
+        col("x.bucket") === col("y.bucket") && col("x.band") === col("y.band") &&
+          col("x.doc_id") < col("y.doc_id"))
+      .where(HashExprs.firstEqIndex(col("x.pfx"), col("y.pfx")) === lit(-1))
+      .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
+      .join(sketch.select(col("doc_id").as("id_a"), col("toks").as("toks_a")), "id_a")
+      .join(sketch.select(col("doc_id").as("id_b"), col("toks").as("toks_b")), "id_b")
+  }
 
   /** MinHash+LSH near-dup candidate pairs, verified with exact token-set
     * Jaccard (so LSH is purely a recall/cost knob; emitted pairs are true
@@ -413,13 +495,17 @@ object Dedup {
     * default. At true 100 TB pair volumes (~1e10 at-threshold pairs),
     * size it with the formula: bands ≥ ln(eps/pairs)/ln(1−J^rows).
     *
-    * Shuffles: signatures are map-side; the bucket self-join is one hash
-    * shuffle on (band, bucket); candidate dedup is a per-row filter
-    * (first colliding band), not a shuffle. Verification joins the per-doc
-    * sorted token-hash set to each side — hash joins on doc id, linear —
-    * and computes `|A ∩ B|` per pair with one codegen'd two-pointer merge,
-    * so there is no postings × postings intermediate and no final
-    * re-aggregation.
+    * Shuffles: sketches are map-side; candidates are one hash shuffle of
+    * per-band (doc_id, band, bucket, pfx) rows at a pinned width
+    * ([[minhashCandidates]]); candidate dedup is a per-row filter inside
+    * that join (first colliding band), not a shuffle. The per-doc token
+    * sets join to each side of a pair — hash joins on doc id, linear; AQE
+    * broadcasts them while they fit and shuffles them once (one exchange,
+    * reused by both sides) when they do not — and `|A ∩ B|`
+    * is one codegen'd two-pointer merge per pair, so there is no postings
+    * × postings intermediate and no final re-aggregation. Two blank
+    * documents have empty token sets, so their 0/0 Jaccard is null and
+    * they are not emitted.
     */
   def minhashDupPairs(
       docs: DataFrame,
@@ -427,46 +513,8 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text",
       bands: Int = 32,
-      rowsPerBand: Int = 4): DataFrame = {
-    // Carry the whole bucket array through the (band, bucket) self-join so a
-    // pair colliding in several bands can be deduplicated with a per-row
-    // filter (first_eq_index == band) instead of a distinct() shuffle of the
-    // full candidate set — at scale the candidate set is the largest
-    // intermediate in this pipeline, and it never touches the network.
-    val b = docs
-      .select(col(idCol).as("doc_id"),
-        HashExprs.minhashBuckets(
-          array_distinct(TextFunctions.tokenize(lower(col(textCol)))),
-          bands, rowsPerBand).as("bk"))
-      .select(col("doc_id"), col("bk"), posexplode_outer(col("bk")))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bucket")
-    val candidates = b.as("x")
-      .join(b.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .where(HashExprs.firstEqIndex(col("x.bk"), col("y.bk")) === col("x.band"))
-      .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-    // Per-doc SORTED 64-bit token-hash set: string-distinct once per doc,
-    // then hashed — so the per-candidate-pair intersection is a two-pointer
-    // merge over primitive longs (sorted_intersect_size) instead of
-    // array_intersect building a string hash set per pair (~300× less CPU
-    // on the pair stream, and no per-pair object churn). At 3M pairs × ~50
-    // tokens the corpus-wide chance of a 64-bit hash collision perturbing a
-    // Jaccard count is ~1e-9.
-    val tokSets = docs.select(col(idCol).as("doc_id"),
-      tokenHashSet(col(textCol)).as("toks"))
-    // No join-strategy hint: the candidate stream is orders of magnitude
-    // larger than the per-doc token-set table, so the RIGHT plan depends on
-    // the corpus — AQE broadcasts the token sets while they fit (candidates
-    // then never cross an exchange for verification) and falls back to a
-    // shuffled hash join from runtime stats when they don't. Forcing
-    // shuffle_hash here cost dd03 two exchanges of the full candidate
-    // stream (~2× the query's shuffle volume) at every scale where the doc
-    // table was broadcastable.
-    candidates
-      .join(tokSets.select(col("doc_id").as("id_a"), col("toks").as("toks_a")), "id_a")
-      .join(tokSets.select(col("doc_id").as("id_b"), col("toks").as("toks_b")), "id_b")
+      rowsPerBand: Int = 4): DataFrame =
+    minhashCandidates(docs, idCol, textCol, bands, rowsPerBand)
       .select(col("id_a"), col("id_b"),
         HashExprs.sortedIntersectSize(col("toks_a"), col("toks_b")).as("n_common"),
         size(col("toks_a")).as("na"), size(col("toks_b")).as("nb"))
@@ -475,7 +523,6 @@ object Dedup {
           (col("na") + col("nb") - col("n_common")).cast("double"))
       .where(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
 
   /** LSH banding OPERATING CURVE — the dedup-side twin of
     * [[Similarity.ivfOperatingCurve]] (ann21): per banding config
@@ -492,9 +539,10 @@ object Dedup {
     * lineage-cut; each config derives its per-band bucket keys by folding
     * contiguous signature slices, so sweeping configs re-reads ≤
     * docs × nHashes longs, never the corpus. Candidate generation per
-    * config is the same bounded (band, bucket) hash shuffle as
-    * [[minhashDupPairs]] with the same first-colliding-band dedup filter
-    * (no distinct() over the candidate stream).
+    * config is the (band, bucket) self-join of [[minhashCandidates]]
+    * with the same first-colliding-band `pfx` filter (no distinct() over
+    * the candidate stream); unlike there, its exchange width is left to
+    * AQE and the audit join's width is pinned instead.
     *
     * Unlike [[minhashDupPairs]] (xxhash64, engine-private, gated on its
     * exact-verified OUTPUT), this signature is built from the
@@ -609,17 +657,6 @@ object Dedup {
         expr(s"n_hits * $fp div greatest(n_candidates, 1)").as("precision_ticks"))
   }
 
-  /** Sorted 64-bit token-hash set per document — the exact-Jaccard
-    * verification payload shared by [[minhashDupPairs]] and the persisted
-    * index: string-distinct once per doc, then hashed, so per-pair
-    * intersection is a codegen'd two-pointer merge over primitive longs.
-    */
-  private def tokenHashSet(textCol: Column): Column =
-    sort_array(transform(
-      filter(array_distinct(TextFunctions.tokenize(lower(textCol))),
-        t => length(t) > 0),
-      t => xxhash64(t)))
-
   /** Build the PERSISTED dedup index of a corpus — the cross-snapshot form
     * a real pipeline runs daily: sketch the corpus ONCE, store the sketch,
     * and dedup each new crawl batch against it ([[dedupAgainstIndex]])
@@ -641,11 +678,7 @@ object Dedup {
       textCol: String = "text",
       bands: Int = 16,
       rowsPerBand: Int = 4): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-      HashExprs.minhashBuckets(
-        array_distinct(TextFunctions.tokenize(lower(col(textCol)))),
-        bands, rowsPerBand).as("bk"),
-      tokenHashSet(col(textCol)).as("toks"))
+    minhashSketch(docs, idCol, textCol, bands, rowsPerBand)
       .select(col("doc_id"), col("bk"), size(col("toks")).as("n_tok"), col("toks"))
 
   /** Explode a [[minhashIndex]] into its narrow bucket-entry form:
@@ -770,11 +803,8 @@ object Dedup {
   private def sketchBatch(
       batch: DataFrame, idCol: String, textCol: String,
       bands: Int, rowsPerBand: Int): DataFrame =
-    batch.select(col(idCol).as("batch_id"),
-      HashExprs.minhashBuckets(
-        array_distinct(TextFunctions.tokenize(lower(col(textCol)))),
-        bands, rowsPerBand).as("qbk"),
-      tokenHashSet(col(textCol)).as("qtoks"))
+    minhashSketch(batch, idCol, textCol, bands, rowsPerBand)
+      .select(col("doc_id").as("batch_id"), col("bk").as("qbk"), col("toks").as("qtoks"))
 
   /** The exact-Jaccard verify tail, shared by both index-lookup forms:
     * candidates arrive as (batch_id, qtoks, corpus_id), corpus token

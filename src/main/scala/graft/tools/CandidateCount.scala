@@ -1,13 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.functions._
-
 /** Measures dd03's LSH CANDIDATE volume (pre-verification pairs) and
   * verified-pair output at a fixture directory — the quantity the
   * sf-scaling claims are about: minhash+LSH cost is linear in candidate
   * volume, so the wall curve is judged against this, not row count.
-  * One pass: candidates from the same (band, bucket) self-join +
-  * first-colliding-band dedup as [[graft.operators.Dedup.minhashDupPairs]]
+  * One pass: candidates from [[graft.operators.Dedup.minhashCandidates]],
+  * the candidate stage of [[graft.operators.Dedup.minhashDupPairs]]
   * (32×4 banding), verified pairs from the judged operator itself.
   *
   * Usage: `CandidateCount <sfDir> [more dirs...]` → one JSON line per dir.
@@ -19,24 +17,9 @@ object CandidateCount {
       .builder(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import graft.functions.HashExprs
     args.foreach { dir =>
       val docs = graft.core.Tables(spark, dir).documents
-      val b = docs
-        .select(col("doc_id"),
-          HashExprs.minhashBuckets(
-            array_distinct(graft.functions.TextFunctions.tokenize(
-              lower(col("text")))), 32, 4).as("bk"))
-        .select(col("doc_id"), col("bk"), posexplode_outer(col("bk")))
-        .withColumnRenamed("pos", "band")
-        .withColumnRenamed("col", "bucket")
-      val candidates = b.as("x")
-        .join(b.as("y"),
-          col("x.band") === col("y.band") &&
-            col("x.bucket") === col("y.bucket") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .where(HashExprs.firstEqIndex(col("x.bk"), col("y.bk")) === col("x.band"))
-        .count()
+      val candidates = graft.operators.Dedup.minhashCandidates(docs).count()
       val verified = graft.operators.Dedup
         .minhashDupPairs(docs, threshold = 0.8).count()
       println(s"""{"dir":"$dir","candidates":$candidates,"verified":$verified}""")

@@ -81,7 +81,80 @@ class DedupSpec extends SparkSpec {
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
     val lsh = Dedup.minhashDupPairs(docsTable, threshold = 0.8)
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
-    assert(lsh == exact) // 16 bands × 4 rows: P(miss|J≥.8) ≈ 2e-4 per pair
+    assert(lsh == exact) // 32 bands × 4 rows: P(miss|J≥.8) ≈ 4.8e-8 per pair
+  }
+
+  /** Brute-force exact token-set Jaccard over every pair, by the MinHash
+    * operator's tokenization (lower-case, split on the explicit whitespace
+    * class, blank tokens dropped); an empty union (0/0) is no pair.
+    */
+  private def bruteForcePairs(
+      corpus: Seq[(Long, String)], threshold: Double): Map[(Long, Long), Double] = {
+    val sets = corpus.map { case (id, t) =>
+      id -> t.toLowerCase(java.util.Locale.ROOT)
+        .split("[\\t\\n\\x0B\\f\\r ]+").filter(_.nonEmpty).toSet
+    }
+    (for {
+      (a, sa) <- sets; (b, sb) <- sets if a < b
+      union = (sa | sb).size if union > 0
+      j = (sa & sb).size.toDouble / union if j >= threshold
+    } yield (a, b) -> j).toMap
+  }
+
+  /** minhashDupPairs output as a pair → Jaccard map; fails on a repeated pair. */
+  private def minhashPairs(corpus: Seq[(Long, String)], threshold: Double) = {
+    val got = Dedup.minhashDupPairs(corpus.toDF("doc_id", "text"), threshold)
+      .as[(Long, Long, Double)].collect().toSeq
+    val byPair = got.map { case (a, b, j) => (a, b) -> j }.toMap
+    assert(byPair.size == got.size, s"a pair was emitted twice: $got")
+    byPair
+  }
+
+  private def assertSamePairs(got: Map[(Long, Long), Double], want: Map[(Long, Long), Double]) = {
+    assert(got.keySet == want.keySet)
+    want.foreach { case (p, j) => assert(math.abs(got(p) - j) < 1e-12, s"pair $p") }
+  }
+
+  test("minhash dup pairs: two blank docs are candidates but not emitted (0/0 is null)") {
+    val corpus = Seq((1L, ""), (2L, "   "), (3L, "\t"), (4L, "alpha beta"), (5L, "alpha beta"))
+    val cands = Dedup.minhashCandidates(corpus.toDF("doc_id", "text"))
+      .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
+    assert(cands.contains((1L, 2L)), "blank docs share every bucket")
+    val got = minhashPairs(corpus, 0.5)
+    assert(got == Map((4L, 5L) -> 1.0))
+    assertSamePairs(got, bruteForcePairs(corpus, 0.5))
+  }
+
+  test("minhash dup pairs: punctuation-only docs are tokens like any other") {
+    val corpus = Seq((1L, "!!! ???"), (2L, "??? !!!"), (3L, "!!! ??? ..."),
+      (4L, "... ,,, ;;;"), (5L, "...  ,,,\t;;;"), (6L, "!!!"), (7L, "-- --"))
+    val got = minhashPairs(corpus, 0.8)
+    assert(got.keySet == Set((1L, 2L), (4L, 5L)))
+    assertSamePairs(got, bruteForcePairs(corpus, 0.8))
+  }
+
+  test("minhash dup pairs: 200 identical docs (one hot bucket per band) give C(200,2) pairs, each once") {
+    val corpus = (1L to 200L).map(i => (i, "one hot bucket shared by every copy")) ++
+      Seq((201L, "a different document entirely"), (202L, "and another one"))
+    val got = minhashPairs(corpus, 0.8)
+    assert(got.size == 200 * 199 / 2)
+    assertSamePairs(got, bruteForcePairs(corpus, 0.8))
+  }
+
+  test("minhash dup pairs: a pair colliding in many bands is emitted once") {
+    val words = (1 to 20).map(i => s"w$i")
+    val corpus = Seq((1L, words.mkString(" ")),
+      (2L, words.updated(7, "changed").mkString(" ")), (3L, "unrelated text here"))
+    val shared = Dedup.lshBuckets(corpus.toDF("doc_id", "text"), "doc_id", "text", 32, 4)
+      .groupBy($"band", $"bucket").agg(collect_set($"doc_id").as("ids"))
+      .where(array_contains($"ids", 1L) && array_contains($"ids", 2L)).count()
+    assert(shared > 1, s"the pair must collide in several bands, got $shared")
+    val cands = Dedup.minhashCandidates(corpus.toDF("doc_id", "text"))
+      .select($"id_a", $"id_b").as[(Long, Long)].collect().toSeq
+    assert(cands == Seq((1L, 2L)))
+    val got = minhashPairs(corpus, 0.8)
+    assert(got.keySet == Set((1L, 2L)))
+    assertSamePairs(got, bruteForcePairs(corpus, 0.8))
   }
 
   test("contamination: only docs sharing an n-gram with the benchmark surface") {

@@ -1,14 +1,20 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
-import org.scalacheck.{Gen, Prop, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.{Gen, Prop, Properties, Test}
+import org.scalacheck.Prop.{forAll, propBoolean}
 
-import graft.functions.HashImpl
+import graft.functions.{HashExprs, HashImpl, TextFunctions}
+import graft.operators.Dedup
 
 /** Property-based checks (SURVEY §5.2(2)) for the native sketch kernels —
-  * pure JVM, no SparkSession, so shrinkage and high case counts are cheap.
+  * pure JVM where they can be, so shrinkage and high case counts are cheap.
+  * The last two properties compare the MinHash sketch and candidate
+  * stage against the Spark forms they replaced, on the suites' shared
+  * session.
   */
 object HashImplProps extends Properties("HashImpl") {
 
@@ -119,4 +125,69 @@ object HashImplProps extends Properties("HashImpl") {
       }
       fps(doc1).intersect(fps(doc2)).nonEmpty
     }
+
+  private lazy val spark = SparkSpec.session
+
+  /** Spark-backed properties plan and run jobs per case, so they check
+    * fewer cases than the pure-JVM ones.
+    */
+  private def sparkCheck(p: Prop): Prop = {
+    val r = Test.check(Test.Parameters.default.withMinSuccessfulTests(25), p)
+    r.passed :| r.status.toString
+  }
+
+  private val rawToken: Gen[String] = Gen.oneOf(token,
+    Gen.oneOf("\u000B", "a\u000Bb", "Ünïcödé", "日本語", "the"))
+
+  /** The sketch hashes the token array it shares with the bucket keys;
+    * the form it replaced tokenized the text again for the token set.
+    */
+  property("minhashIndex toks == the per-text sort_array(transform(filter(...), xxhash64)) form") =
+    sparkCheck(forAll(Gen.listOf(rawToken), Gen.oneOf(" ", "\t", "\u000B", "  ")) { (ts, sep) =>
+      val session = spark
+      import session.implicits._
+      val docs = Seq((1L, (ts ++ ts.take(2)).mkString(sep))).toDF("doc_id", "text")
+      val old = sort_array(transform(
+        filter(array_distinct(TextFunctions.tokenize(lower(col("text")))),
+          x => length(x) > 0), x => xxhash64(x)))
+      val want = docs.select(old).head().getSeq[Long](0)
+      val idx = Dedup.minhashIndex(docs).select($"toks", $"n_tok").head()
+      (idx.getSeq[Long](0) == want && idx.getInt(1) == want.size) :| s"tokens $ts"
+    })
+
+  /** The candidate stage `minhashCandidates` replaced: a self-join of the
+    * exploded rows carrying the whole bucket array, deduplicated to the
+    * first colliding band.
+    */
+  private def selfJoinCandidates(docs: DataFrame, bands: Int, rows: Int): DataFrame = {
+    val b = docs.select(col("doc_id"), HashExprs.minhashBuckets(
+        array_distinct(TextFunctions.tokenize(lower(col("text")))), bands, rows).as("bk"))
+      .select(col("doc_id"), col("bk"), posexplode_outer(col("bk")))
+    b.as("x").join(b.as("y"), col("x.pos") === col("y.pos") &&
+        col("x.col") === col("y.col") && col("x.doc_id") < col("y.doc_id"))
+      .where(HashExprs.firstEqIndex(col("x.bk"), col("y.bk")) === col("x.pos"))
+      .select(col("x.doc_id"), col("y.doc_id"))
+  }
+
+  /** Small corpora over a six-word vocabulary (so buckets collide often),
+    * with blank and null texts.
+    */
+  private val corpus: Gen[List[(Long, String)]] = {
+    val text = Gen.oneOf(
+      Gen.listOf(Gen.oneOf("a", "b", "c", "d", "E", "f")).map(_.take(5).mkString(" ")),
+      Gen.oneOf("", "  ", null))
+    Gen.choose(0, 24).flatMap(n => Gen.listOfN(n, text))
+      .map(_.zipWithIndex.map { case (t, i) => (i.toLong, t) })
+  }
+
+  property("minhashCandidates pairs == the bucket-array self-join's, each pair once") =
+    sparkCheck(forAll(corpus, Gen.choose(1, 8), Gen.choose(1, 3)) { (c, bands, rows) =>
+      val session = spark
+      import session.implicits._
+      val docs = c.toDF("doc_id", "text")
+      val got = Dedup.minhashCandidates(docs, bands = bands, rowsPerBand = rows)
+        .select($"id_a", $"id_b").as[(Long, Long)].collect().sorted.toSeq
+      val want = selfJoinCandidates(docs, bands, rows).as[(Long, Long)].collect().sorted.toSeq
+      (got == want) :| s"bands $bands rows $rows: got $got want $want"
+    })
 }
