@@ -69,6 +69,9 @@ object GraftExtensions {
     ("nfc_normalize", info("nfc_normalize",
       "nfc_normalize(str) - Unicode NFC (canonical composition) form"),
       { case Seq(s) => NfcNormalize(s) }),
+    ("word_tokens", info("word_tokens",
+      "word_tokens(str) - whitespace-split, \\W-stripped, lower-cased non-empty tokens"),
+      { case Seq(s) => WordTokens(s) }),
     ("winnow_fps", info("winnow_fps",
       "winnow_fps(tokens, k, w) - winnowing fingerprint set (k-gram FNV window minima)"),
       { case Seq(t, k, w) => WinnowFps(t, intLit(k, "k"), intLit(w, "w")) }))

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnShim
 
 /** Column-level text functions — the reference's scalar surface plus the
   * text-analysis extensions, all as compositions of codegen'd built-ins
@@ -14,9 +15,18 @@ import org.apache.spark.sql.functions._
   *    oracle side, because RE2's `\s` EXCLUDES `\x0B` while Java's
   *    includes it: with a bare `\s+` the two engines silently diverge on
   *    vertical-tab input (ADVICE r7)
-  *  - normalize: lower-case then strip `\W` (ASCII-classed, so `don't` →
-  *    `dont`, `co-op` → `coop`) — `WorkerNode.java:45`
+  *  - normalize: strip `\W` (ASCII-classed, so `don't` → `dont`, `co-op`
+  *    → `coop`) THEN lower-case, as the DuckDB oracle does. The reference
+  *    (`WorkerNode.java:45`) lower-cases first; the two orders differ only
+  *    on characters whose lower case is ASCII (U+212A KELVIN SIGN → `k`
+  *    there, dropped here; `İ` U+0130 → `i̇` there, so `"İx"` → `ix` there
+  *    and `x` here). The oracle is the specification, so the engine keeps
+  *    strip-then-lower
   *  - filter: drop tokens empty after normalization (`WorkerNode.java:46`)
+  *
+  * [[wordTokens]] is the engine's form of all three steps (one native
+  * pass); [[tokenize]], [[normalizeToken]] and [[isNonEmptyToken]] are the
+  * regex specification it is checked against.
   */
 object TextFunctions {
 
@@ -28,7 +38,7 @@ object TextFunctions {
     */
   def tokenize(text: Column): Column = split(trim(text), "[\\t\\n\\x0B\\f\\r ]+")
 
-  /** Reference normalization: lower-case + strip non-word chars.
+  /** Reference normalization: strip non-word chars, then lower-case.
     * Java `\W` == `[^a-zA-Z0-9_]` (ASCII) by default; Spark's
     * `regexp_replace` uses java.util.regex too, so semantics are identical.
     */
@@ -37,6 +47,14 @@ object TextFunctions {
 
   /** Predicate: token survives normalization (non-empty). */
   def isNonEmptyToken(token: Column): Column = length(token) > 0
+
+  /** `word_tokens(text)`: split, normalize and drop empty tokens in one
+    * native pass over the UTF-8 bytes → array<string> with no null or
+    * empty element; NULL text gives NULL. Equal to
+    * `filter(transform(tokenize(text), normalizeToken), isNonEmptyToken)`.
+    */
+  def wordTokens(text: Column): Column =
+    ColumnShim.column(WordTokens(ColumnShim.expression(text)))
 
   // ---------------------------------------------------------------------
   // Text analysis (LLM-pipeline extensions; no reference counterpart)

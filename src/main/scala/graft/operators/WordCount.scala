@@ -9,7 +9,7 @@ import graft.functions.TextFunctions._
   *
   * {{{
   * SELECT word, count(*) AS cnt
-  * FROM   (tokenized, lower-cased, \W-stripped input text)
+  * FROM   (tokenized, \W-stripped, lower-cased input text: word_tokens)
   * GROUP  BY word
   * ORDER  BY cnt ASC, word ASC
   * }}}
@@ -34,10 +34,7 @@ object WordCount {
 
   /** Core transform: text column → (word, cnt), unsorted. */
   def counts(df: DataFrame, textCol: String = "value"): DataFrame = {
-    val token = explode(tokenize(col(textCol))).as("raw")
-    df.select(token)
-      .select(normalizeToken(col("raw")).as("word"))
-      .where(isNonEmptyToken(col("word")))
+    df.select(explode(wordTokens(col(textCol))).as("word"))
       .groupBy(col("word"))
       .agg(count(lit(1)).as("cnt"))
   }

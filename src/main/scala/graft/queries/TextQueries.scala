@@ -976,16 +976,13 @@ object TextQueries {
     * per source, ranked by tf/df (source term frequency over corpus
     * document frequency — the idf log is monotone in 1/df, so ranking by
     * the exact integer ratio avoids cross-engine libm differences).
-    * Tokens use the reference's normalize semantics (lower + \W-strip).
+    * Tokens use the reference's normalize semantics (`word_tokens`).
     */
   private def tfidfTopTerms(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = Tables(spark, dir).documents
       .select(col("doc_id"), col("source"),
-        explode(TextFunctions.tokenize(col("text"))).as("raw"))
-      .select(col("doc_id"), col("source"),
-        TextFunctions.normalizeToken(col("raw")).as("tok"))
-      .where(TextFunctions.isNonEmptyToken(col("tok")))
+        explode(TextFunctions.wordTokens(col("text"))).as("tok"))
     val df_ = toks.groupBy(col("tok"))
       .agg(countDistinct(col("doc_id")).as("df"))
     val tf = toks.groupBy(col("source"), col("tok"))
@@ -1586,9 +1583,7 @@ object TextQueries {
         pmod(graft.functions.HashExprs.fnv64(
           concat(col("tok"), lit("#" + i))), lit(w)).as("bucket"))): _*))
     val counts = Tables(spark, dir).documents
-      .select(explode(TextFunctions.tokenize(col("text"))).as("raw"))
-      .select(TextFunctions.normalizeToken(col("raw")).as("tok"))
-      .where(TextFunctions.isNonEmptyToken(col("tok")))
+      .select(explode(TextFunctions.wordTokens(col("text"))).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
     val counters = counts.select(col("cnt"), buckets.as("hb"))
       .groupBy(col("hb.i").as("i"), col("hb.bucket").as("bucket"))
@@ -1976,9 +1971,7 @@ object TextQueries {
   private def bm25(spark: SparkSession, dir: String): DataFrame = {
     val terms = Seq("query", "stream", "vector")
     val toks = Tables(spark, dir).documents
-      .select(col("doc_id"), explode(TextFunctions.tokenize(col("text"))).as("raw"))
-      .select(col("doc_id"), TextFunctions.normalizeToken(col("raw")).as("tok"))
-      .where(TextFunctions.isNonEmptyToken(col("tok")))
+      .select(col("doc_id"), explode(TextFunctions.wordTokens(col("text"))).as("tok"))
     val dl = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
     val globals = dl.agg(count(lit(1)).cast("double").as("n_docs"),
       (sum(col("dl")).cast("double") / count(lit(1)).cast("double")).as("avgdl"))
@@ -2246,17 +2239,12 @@ object TextQueries {
     * zipping (slice + arrays_zip + explode) — no per-document window, no
     * position shuffle; the only exchange is the final count aggregation
     * (map-side combined), so the plan is the same two-stage shape as word
-    * count no matter how long documents get. The HOF normalize runs once
-    * per token (CodegenFallback acceptable off the per-pair hot path; the
-    * [[graft.functions.HashImpl]] native loop is the escape hatch).
+    * count no matter how long documents get. Each document's tokens come
+    * from one native `word_tokens` pass.
     */
   private def bigrams(spark: SparkSession, dir: String): DataFrame = {
-    val cleaned = filter(
-      transform(TextFunctions.tokenize(col("text")),
-        t => TextFunctions.normalizeToken(t)),
-      t => TextFunctions.isNonEmptyToken(t))
     Tables(spark, dir).documents
-      .select(cleaned.as("l"))
+      .select(TextFunctions.wordTokens(col("text")).as("l"))
       .where(size(col("l")) >= 2)
       .select(explode(arrays_zip(
         slice(col("l"), lit(1), size(col("l")) - 1).as("w1"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import graft.core.QueryDef.{dec, dsum}
+import graft.functions.TextFunctions.wordTokens
 
 /** Structured Streaming surface — the reference is batch-only (SURVEY
   * §2.9 "absent"), so these are the reference's pipeline shapes lifted to
@@ -34,11 +35,8 @@ object StreamOps {
 
   /** Streaming word count — the reference query over a text stream. */
   def streamingWordCount(lines: DataFrame, textCol: String = "value"): DataFrame = {
-    import graft.functions.TextFunctions._
     lines
-      .select(explode(tokenize(col(textCol))).as("raw"))
-      .select(normalizeToken(col("raw")).as("word"))
-      .where(isNonEmptyToken(col("word")))
+      .select(explode(wordTokens(col(textCol))).as("word"))
       .groupBy(col("word"))
       .agg(count(lit(1)).as("cnt"))
   }

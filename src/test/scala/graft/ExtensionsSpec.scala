@@ -11,11 +11,13 @@ class ExtensionsSpec extends SparkSpec {
     val r = spark.sql(
       """SELECT fnv64('a') AS f,
         |  cosine_sim(array(3.0d, 0.0d), array(1.0d, 0.0d)) AS c,
-        |  sorted_intersect_size(array(1L, 2L, 5L), array(2L, 5L, 9L)) AS s
-        |""".stripMargin).as[(Long, Double, Int)].head()
+        |  sorted_intersect_size(array(1L, 2L, 5L), array(2L, 5L, 9L)) AS s,
+        |  word_tokens(' Don\'t  CO-OP -- ') AS w
+        |""".stripMargin).as[(Long, Double, Int, Seq[String])].head()
     assert(r._1 == (-3750763034362895579L ^ 97L) * 1099511628211L)
     assert(math.abs(r._2 - 1.0) < 1e-12)
     assert(r._3 == 2)
+    assert(r._4 == Seq("dont", "coop"))
   }
 
   test("SQL fnv64 equals the Column-API fingerprint on fixture docs") {

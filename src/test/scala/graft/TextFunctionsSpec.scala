@@ -1,12 +1,16 @@
 package graft
 
+import java.util.Locale
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 import graft.operators.WordCount
 
 /** Pins the reference's token semantics (SURVEY §2 O3-O5, §2.10):
-  * `trim().split("\\s+")`, `toLowerCase().replaceAll("\\W","")`, drop
-  * empty — boundary cases straight from FIXTURES §A.
+  * `trim().split("\\s+")`, strip `\W`, lower-case, drop empty — boundary
+  * cases straight from FIXTURES §A. The engine and the DuckDB oracle strip
+  * before lower-casing; the reference (`WorkerNode.java:45`) lower-cases
+  * first; the two orders differ only on characters whose lower case is
+  * ASCII, pinned below.
   */
 class TextFunctionsSpec extends SparkSpec {
   import spark.implicits._
@@ -39,6 +43,17 @@ class TextFunctionsSpec extends SparkSpec {
   test("unicode: Java \\W is ASCII-classed, so accents are stripped") {
     // é is \W under the reference's regex (WorkerNode.java:45) → stripped
     assert(normalized("café") == Seq("caf"))
+  }
+
+  test("word_tokens strips \\W before lower-casing (the oracle's order, not the reference's)") {
+    // Lower-casing first, as WorkerNode.java:45 does, turns U+212A KELVIN
+    // SIGN into ASCII `k` and U+0130 into `i` + U+0307, so it keeps them.
+    val reference = (s: String) => s.toLowerCase(Locale.ROOT).replaceAll("\\W", "")
+    assert(reference("\u212A") == "k" && reference("\u0130x") == "ix")
+    val got = Seq("\u212A", "\u0130x").toDF("value")
+      .select(wordTokens(col("value"))).as[Seq[String]].collect().toSeq
+    assert(got == Seq(Seq.empty, Seq("x")))
+    assert(got == Seq("\u212A", "\u0130x").map(normalized))
   }
 
   test("word count golden: counts and (cnt ASC, word ASC) global order") {

@@ -2,6 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 import graft.operators.WordCount
 
 /** End-to-end over the reference's actual I/O surface: multi-file text
@@ -51,5 +55,33 @@ class WordCountE2ESpec extends SparkSpec {
       WordCount.collectSorted(df, maxRows = 4)
     }
     assert(e.getMessage.contains("writeSorted"))
+  }
+
+  test("writeSorted tokenizes in one native word_tokens pass inside whole-stage codegen") {
+    val out = Files.createTempDirectory(Paths.get("target"), "wc_plan").resolve("out").toString
+    @volatile var plan: String = null
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        val p = qe.executedPlan.toString
+        if (p.contains(out)) plan = p
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      WordCount.writeSorted(Seq("The fox, the DOG", "").toDF("value").repartition(3), out)
+      eventually(timeout(30.seconds))(assert(plan != null))
+    } finally spark.listenerManager.unregister(listener)
+    assert(!plan.contains("regexp_replace") && !plan.contains("split("), plan)
+    val fin = plan.substring(plan.indexOf("== Final Plan =="), plan.indexOf("== Initial Plan =="))
+    assert("Generate ".r.findAllIn(fin).size == 1, fin)
+    // the partial aggregate and the generator share one codegen stage,
+    // generator below the aggregate
+    val agg = """\*\((\d+)\) HashAggregate\(keys=\[word#\d+\], functions=\[partial_count""".r
+      .findFirstMatchIn(fin)
+    val gen = """\*\((\d+)\) Generate explode\(word_tokens\(value#\d+\)\)""".r
+      .findFirstMatchIn(fin)
+    assert(agg.isDefined && gen.isDefined, fin)
+    assert(agg.get.group(1) == gen.get.group(1) && agg.get.start < gen.get.start, fin)
   }
 }
