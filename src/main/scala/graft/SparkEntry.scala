@@ -34,9 +34,5 @@ object SparkEntry {
     * (engine-specific hashing) → driver records a weaker rows-only check.
     */
   def oracleSql: Map[String, String] =
-    allDefs.collect { case (k, QueryDef(_, Some(sql), _)) => k -> sql }
-
-  /** Headline queries for the per-round benchmark. */
-  def benchQueries: Map[String, (SparkSession, String) => DataFrame] =
-    allDefs.collect { case (k, d) if d.benchmark => k -> d.fn }
+    allDefs.collect { case (k, QueryDef(_, Some(sql))) => k -> sql }
 }

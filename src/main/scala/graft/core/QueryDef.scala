@@ -18,8 +18,7 @@ import org.apache.spark.sql.functions._
   */
 final case class QueryDef(
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
-    benchmark: Boolean = false)
+    oracle: Option[String])
 
 object QueryDef {
   /** Exact-decimal view of a 2-decimal-granularity DOUBLE column. */

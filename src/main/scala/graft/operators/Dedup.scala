@@ -1299,8 +1299,8 @@ object Dedup {
     val spark = pairs.sparkSession
     // both keys: AQE derives an exchange's pre-coalesce width from
     // initialPartitionNum when the session sets one, so clamping only
-    // shuffle.partitions would be ignored under the session's
-    // input-derived adaptive default (GraftSession.inputDerivedPartitions)
+    // shuffle.partitions would be ignored under GraftSession's 2×-cores
+    // initial width
     val partKeys = Seq("spark.sql.shuffle.partitions",
       "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions")

@@ -44,7 +44,7 @@ object FuzzyJoin {
       .select(col(idCol).as("id"), col(strCol).as("s"),
         explode(deletionVariants(col(strCol))).as("v0"))
       .select(col("id"), col("s"), xxhash64(col("v0")).as("v"))
-    // Verify order, A/B-measured at sf1 (graft.bench.Dd12Profile):
+    // Verify order, A/B-measured at sf1 on dd12:
     // FILTER FIRST, distinct after — 6.98 s vs 8.93 s for
     // distinct-then-verify. The inverted shape looked attractive (one
     // levenshtein per DISTINCT pair instead of two per raw candidate —

@@ -78,7 +78,7 @@ object Graph {
     math.max(1L, (edgeCount + 1999999) / 2000000).toInt
 
   /** Drop every cache [[kCore]] left resident (the final round's edge
-    * snapshot). [[graft.Bench]] calls this between timed runs.
+    * snapshot). perfbench's `Probe` calls this between timed runs.
     */
   def releaseCaches(): Unit = {
     val prev = lastKcoreRelease.getAndSet(null)

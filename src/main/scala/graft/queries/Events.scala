@@ -2397,27 +2397,26 @@ object Events {
     "ev44_layout_write"    -> QueryDef(layoutWrite, Some(layoutWriteSql)),
     "ev41_audited_write"   -> QueryDef(auditedWrite, Some(auditedWriteSql)),
     "ev40_custom_source"   -> QueryDef(customSource, Some(customSourceSql)),
-    "ev39_attribution"     -> QueryDef(attribution, Some(attributionSql), benchmark = true),
-    "ev42_path_analysis"   -> QueryDef(pathAnalysis, Some(pathAnalysisSql), benchmark = true),
+    "ev39_attribution"     -> QueryDef(attribution, Some(attributionSql)),
+    "ev42_path_analysis"   -> QueryDef(pathAnalysis, Some(pathAnalysisSql)),
     "ev43_conversion_latency" -> QueryDef(conversionLatency, Some(conversionLatencySql)),
     "ev38_kanonymity"      -> QueryDef(kAnonymity, Some(kAnonymitySql)),
     "ev36_observed_metrics" -> QueryDef(observedMetrics, Some(observedMetricsSql)),
-    "ev37_cuped"           -> QueryDef(cuped, Some(cupedSql), benchmark = true),
+    "ev37_cuped"           -> QueryDef(cuped, Some(cupedSql)),
     "gr08_modularity"      -> QueryDef(modularity, Some(modularitySql)),
-    "gr10_hits"            -> QueryDef(hitsQ, Some(hitsSql), benchmark = true),
-    "gr09_lpa_hubcap"      -> QueryDef(labelPropHubCap, Some(labelPropHubCapSql),
-      benchmark = true),
-    "gr07_label_prop"      -> QueryDef(labelProp, Some(labelPropSql), benchmark = true),
-    "ev34_linear_interp"   -> QueryDef(linearInterp, Some(linearInterpSql), benchmark = true),
-    "ev35_twap"            -> QueryDef(twap, Some(twapSql), benchmark = true),
-    "gr06_kcore"           -> QueryDef(kCoreQ, Some(kCoreSql), benchmark = true),
+    "gr10_hits"            -> QueryDef(hitsQ, Some(hitsSql)),
+    "gr09_lpa_hubcap"      -> QueryDef(labelPropHubCap, Some(labelPropHubCapSql)),
+    "gr07_label_prop"      -> QueryDef(labelProp, Some(labelPropSql)),
+    "ev34_linear_interp"   -> QueryDef(linearInterp, Some(linearInterpSql)),
+    "ev35_twap"            -> QueryDef(twap, Some(twapSql)),
+    "gr06_kcore"           -> QueryDef(kCoreQ, Some(kCoreSql)),
     "ev32_ewma_smooth"     -> QueryDef(ewmaSmooth, Some(ewmaSmoothSql)),
     "ev33_mad_outliers"    -> QueryDef(madOutliers, Some(madOutliersSql)),
     "ev20_merge_upsert"    -> QueryDef(mergeUpsert, Some(mergeUpsertSql)),
     "ev21_agg_state_merge" -> QueryDef(aggStateMerge, Some(aggStateMergeSql)),
     "gr02_triangles"       -> QueryDef(triangles, Some(trianglesSql)),
     "gr03_shortest_path"   -> QueryDef(shortestPath, Some(shortestPathSql)),
-    "gr05_components"      -> QueryDef(components, Some(componentsSql), benchmark = true),
+    "gr05_components"      -> QueryDef(components, Some(componentsSql)),
     "ev23_ohlc_bars"       -> QueryDef(ohlcBars, Some(ohlcBarsSql)),
     "ev24_cdc_latest"      -> QueryDef(cdcLatest, Some(cdcLatestSql)),
     "ev25_variant_props"   -> QueryDef(variantProps, Some(variantPropsSql)),
@@ -2427,22 +2426,22 @@ object Events {
     "ev17_retention"       -> QueryDef(retention, Some(retentionSql)),
     "ev18_scd2"            -> QueryDef(scd2, Some(scd2Sql)),
     "ev19_table_diff"      -> QueryDef(tableDiff, Some(tableDiffSql)),
-    "gr01_pagerank"        -> QueryDef(pageRank, Some(pageRankSql), benchmark = true),
-    "gr11_ppr_seed_expand" -> QueryDef(pprSeedExpand, Some(pprSeedExpandSql), benchmark = true),
+    "gr01_pagerank"        -> QueryDef(pageRank, Some(pageRankSql)),
+    "gr11_ppr_seed_expand" -> QueryDef(pprSeedExpand, Some(pprSeedExpandSql)),
     "ev15_dynamic_partition_overwrite" ->
       QueryDef(dynPartitionOverwrite, Some(dynPartitionOverwriteSql)),
     "ev14_compaction"      -> QueryDef(compaction, Some(compactionSql)),
     "ev13_schema_evolution" -> QueryDef(schemaEvolution, Some(schemaEvolutionSql)),
     "ev12_map_ops"         -> QueryDef(mapOps, Some(mapOpsSql)),
-    "ev01_tumbling_window" -> QueryDef(tumbling, Some(tumblingSql), benchmark = true),
+    "ev01_tumbling_window" -> QueryDef(tumbling, Some(tumblingSql)),
     "ev08_partitioned_sink" -> QueryDef(partitionedSink, Some(partitionedSinkSql)),
     "ev09_auto_range_join" -> QueryDef(autoRangeJoin, Some(autoRangeJoinSql)),
     "ev11_wide_range_join" -> QueryDef(wideRangeJoin, Some(wideRangeJoinSql)),
     "ev10_gapfill"         -> QueryDef(gapFill, Some(gapFillSql)),
-    "ev06_range_join"      -> QueryDef(rangeJoin, Some(rangeJoinSql), benchmark = true),
+    "ev06_range_join"      -> QueryDef(rangeJoin, Some(rangeJoinSql)),
     "ev02_json_extract"    -> QueryDef(json, Some(jsonSql)),
-    "ev03_sessionize"      -> QueryDef(sessionize, Some(sessionizeSql), benchmark = true),
-    "ev04_asof_join"       -> QueryDef(asof, Some(asofSql), benchmark = true),
+    "ev03_sessionize"      -> QueryDef(sessionize, Some(sessionizeSql)),
+    "ev04_asof_join"       -> QueryDef(asof, Some(asofSql)),
     "ev05_csv_json_roundtrip" -> QueryDef(roundtrip, Some(roundtripSql)),
     "ev07_orc_roundtrip"   -> QueryDef(orcRoundtrip, Some(orcRoundtripSql)),
     "ev27_xml_roundtrip"   -> QueryDef(xmlRoundtrip, Some(xmlRoundtripSql)),

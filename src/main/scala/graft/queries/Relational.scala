@@ -2013,16 +2013,16 @@ object Relational {
       |FROM ids GROUP BY 1 ORDER BY bucket_id""".stripMargin
 
   val defs: Map[String, QueryDef] = Map(
-    "q66_join_pushdown"    -> QueryDef(q66, Some(q66Sql), benchmark = true),
+    "q66_join_pushdown"    -> QueryDef(q66, Some(q66Sql)),
     "q65_metadata_column"  -> QueryDef(q65, Some(q65Sql)),
-    "q64_spj_join"         -> QueryDef(q64, Some(q64Sql), benchmark = true),
-    "q62_scan_pushdown"    -> QueryDef(q62, Some(q62Sql), benchmark = true),
+    "q64_spj_join"         -> QueryDef(q64, Some(q64Sql)),
+    "q62_scan_pushdown"    -> QueryDef(q62, Some(q62Sql)),
     "q61_catalog_function" -> QueryDef(q61, Some(q61Sql)),
     "q60_catalog_table"    -> QueryDef(q60, Some(q60Sql)),
-    "q59_native_topk"      -> QueryDef(q59, Some(q59Sql), benchmark = true),
+    "q59_native_topk"      -> QueryDef(q59, Some(q59Sql)),
     "q58_quantile_sketch"  -> QueryDef(q58, Some(q58Sql)),
     "q57_lateral_topk"     -> QueryDef(q57, Some(q57Sql)),
-    "q56_exact_quantiles"  -> QueryDef(q56, Some(q56Sql), benchmark = true),
+    "q56_exact_quantiles"  -> QueryDef(q56, Some(q56Sql)),
     "q49_exists_subqueries" -> QueryDef(q49, Some(q49Sql)),
     "q45_unpivot"          -> QueryDef(q45, Some(q45Sql)),
     "q46_stats_moments"    -> QueryDef(q46, Some(q46Sql)),
@@ -2034,7 +2034,7 @@ object Relational {
     "q40_sql_udf"          -> QueryDef(q40, Some(q40Sql)),
     "q41_lateral_topk"     -> QueryDef(q41, Some(q41Sql)),
     "q39_zorder_layout"    -> QueryDef(q39, Some(q39Sql)),
-    "q63_hilbert_locality" -> QueryDef(q63, Some(q63Sql), benchmark = true),
+    "q63_hilbert_locality" -> QueryDef(q63, Some(q63Sql)),
     "q38_array_ops"        -> QueryDef(q38, Some(q38Sql)),
     "q37_equidepth"        -> QueryDef(q37, Some(q37Sql)),
     "q34_quality_audit"    -> QueryDef(q34, Some(q34Sql)),
@@ -2043,9 +2043,9 @@ object Relational {
     "q32_approx_percentile" -> QueryDef(q32, Some(q32Sql)),
     "q33_correlated_subquery" -> QueryDef(q33, Some(q33Sql)),
     "q35_window_family"    -> QueryDef(q35, Some(q35Sql)),
-    "q01_pricing_summary"  -> QueryDef(q01, Some(q01Sql), benchmark = true),
+    "q01_pricing_summary"  -> QueryDef(q01, Some(q01Sql)),
     "q02_filter_project"   -> QueryDef(q02, Some(q02Sql)),
-    "q03_star_join"        -> QueryDef(q03, Some(q03Sql), benchmark = true),
+    "q03_star_join"        -> QueryDef(q03, Some(q03Sql)),
     "q04_topn_customers"   -> QueryDef(q04, Some(q04Sql)),
     "q05_semi_join"        -> QueryDef(q05, Some(q05Sql)),
     "q06_anti_join"        -> QueryDef(q06, Some(q06Sql)),
@@ -2056,12 +2056,12 @@ object Relational {
     "q11_set_ops"          -> QueryDef(q11, Some(q11Sql)),
     "q12_rollup"           -> QueryDef(q12, Some(q12Sql)),
     "q13_scalar_funcs"     -> QueryDef(q13, Some(q13Sql)),
-    "q14_cond_agg"         -> QueryDef(q14, Some(q14Sql), benchmark = true),
+    "q14_cond_agg"         -> QueryDef(q14, Some(q14Sql)),
     "q15_minmax"           -> QueryDef(q15, Some(q15Sql)),
     "q16_group_having"     -> QueryDef(q16, Some(q16Sql)),
-    "q17_avg_subquery"     -> QueryDef(q17, Some(q17Sql), benchmark = true),
+    "q17_avg_subquery"     -> QueryDef(q17, Some(q17Sql)),
     "q18_big_orders"       -> QueryDef(q18, Some(q18Sql)),
-    "q19_region_rollup"    -> QueryDef(q19, Some(q19Sql), benchmark = true),
+    "q19_region_rollup"    -> QueryDef(q19, Some(q19Sql)),
     "q20_cube"             -> QueryDef(q20, Some(q20Sql)),
     "q21_percentile"       -> QueryDef(q21, Some(q21Sql)),
     "q22_sql_api"          -> QueryDef(q22, Some(q22Sql)),

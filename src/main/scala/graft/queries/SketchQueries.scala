@@ -50,8 +50,8 @@ object SketchQueries {
     }
   }
 
-  /** Release the swap-tracked sketch caches (called by [[graft.Bench]]
-    * before each timed run, like TextQueries/Graph.releaseCaches).
+  /** Release the swap-tracked sketch caches (called by perfbench's
+    * `Probe` between timed runs, like TextQueries/Graph.releaseCaches).
     */
   def releaseCaches(): Unit =
     Seq(lastKmvCache, lastSketchCache).foreach { slot =>
@@ -634,9 +634,9 @@ object SketchQueries {
        |ORDER BY e.event_type""".stripMargin
 
   val defs: Map[String, QueryDef] = Map(
-    "sx05_sample_quantiles" -> QueryDef(sampleQuantilesQ, Some(sampleQuantilesSql), benchmark = true),
-    "sx01_cms_freq"    -> QueryDef(cmsFreq, Some(cmsFreqSql), benchmark = true),
-    "sx02_kmv_overlap" -> QueryDef(kmvOverlap, Some(kmvOverlapSql), benchmark = true),
-    "sx03_hll_vocab"   -> QueryDef(hllVocab, Some(hllVocabSql), benchmark = true),
-    "sx04_bloom_contain" -> QueryDef(bloomContain, Some(bloomContainSql), benchmark = true))
+    "sx05_sample_quantiles" -> QueryDef(sampleQuantilesQ, Some(sampleQuantilesSql)),
+    "sx01_cms_freq"    -> QueryDef(cmsFreq, Some(cmsFreqSql)),
+    "sx02_kmv_overlap" -> QueryDef(kmvOverlap, Some(kmvOverlapSql)),
+    "sx03_hll_vocab"   -> QueryDef(hllVocab, Some(hllVocabSql)),
+    "sx04_bloom_contain" -> QueryDef(bloomContain, Some(bloomContainSql)))
 }

@@ -998,12 +998,12 @@ object StreamQueries {
     * session's [[graft.core.ModelRegistry]]: first use trains via
     * [[TextQueries.logRegTrain]] (bit-deterministic, so the gate hash is
     * unchanged), later invocations serve the frozen model — the deployed
-    * shape, and what makes this query's bench number the SERVING path
-    * (tx40 remains the judged trainer; it never touches the registry).
+    * shape (tx40 remains the judged trainer; it never touches the
+    * registry).
     */
   private def streamQualityScore(spark: SparkSession, dir: String): DataFrame = {
     val (statsF, wF) = graft.core.ModelRegistry.memo(
-        spark, s"st24_logreg:$dir", metric = "st24_stream_quality_score") {
+        spark, s"st24_logreg:$dir") {
       val (st, _, wt) = TextQueries.logRegTrain(spark, dir)
       (graft.core.ModelRegistry.freeze(st), graft.core.ModelRegistry.freeze(wt))
     }
@@ -1325,15 +1325,13 @@ object StreamQueries {
     * Centroids come from the session's [[graft.core.ModelRegistry]]:
     * first use runs the deterministic k-means trainer (identical rows,
     * so the gate hash is unchanged), later invocations serve the frozen
-    * index — the deployed retrieval-endpoint shape, and what makes this
-    * query's bench number the SERVING path (ann16 remains the judged,
-    * benchmark-flagged trainer and never touches the registry).
+    * index — the deployed retrieval-endpoint shape (ann16 remains the
+    * judged trainer and never touches the registry).
     */
   private def streamAnnServe(spark: SparkSession, dir: String): DataFrame = {
     val emb = graft.core.Tables(spark, dir).embeddings
     val centroids = graft.core.ModelRegistry.memo(
-        spark, s"st29_ivf_centroids_16x5:$dir",
-        metric = "st29_stream_ann_serve") {
+        spark, s"st29_ivf_centroids_16x5:$dir") {
       graft.core.ModelRegistry.freeze(
         graft.operators.Similarity.kmeansCentroids(emb, nCells = 16, rounds = 5))
     }.toDF(spark)
@@ -1552,43 +1550,43 @@ object StreamQueries {
     "st36_stream_audit_write" -> QueryDef(streamAuditWrite,
       Some(streamAuditWriteSql)),
     "st35_stream_sample_quantiles" -> QueryDef(streamSampleQuantiles,
-      Some(streamSampleQuantilesSql), benchmark = true),
+      Some(streamSampleQuantilesSql)),
     "st34_stream_dynamic_session" -> QueryDef(streamSessionDynamic,
-      Some(streamSessionDynamicSql), benchmark = true),
+      Some(streamSessionDynamicSql)),
     "st33_stream_custom_source" -> QueryDef(streamCustomSource,
       Some(streamCustomSourceSql)),
     "st32_stream_drift_monitor" -> QueryDef(streamCentroidDrift,
-      Some(VectorQueries.annCentroidDriftSql), benchmark = true),
+      Some(VectorQueries.annCentroidDriftSql)),
     "st31_stream_index_ingest" -> QueryDef(streamIndexIngest,
-      Some(TextQueries.dedupIncrementalSql), benchmark = true),
+      Some(TextQueries.dedupIncrementalSql)),
     "st30_stream_threshold_prune" -> QueryDef(streamThresholdPrune,
-      Some(streamThresholdPruneSql), benchmark = true),
+      Some(streamThresholdPruneSql)),
     "st29_stream_ann_serve" -> QueryDef(streamAnnServe,
-      Some(VectorQueries.annIvfSql), benchmark = true),
-    "st28_stream_bloom" -> QueryDef(streamBloom, Some(streamBloomSql), benchmark = true),
-    "st27_stream_cms" -> QueryDef(streamCms, Some(streamCmsSql), benchmark = true),
-    "st26_stream_hll" -> QueryDef(streamHll, Some(streamHllSql), benchmark = true),
+      Some(VectorQueries.annIvfSql)),
+    "st28_stream_bloom" -> QueryDef(streamBloom, Some(streamBloomSql)),
+    "st27_stream_cms" -> QueryDef(streamCms, Some(streamCmsSql)),
+    "st26_stream_hll" -> QueryDef(streamHll, Some(streamHllSql)),
     "st25_stream_dedup_state" -> QueryDef(streamDedupState,
-      Some(streamDedupStateSql), benchmark = true),
+      Some(streamDedupStateSql)),
     "st24_stream_quality_score" -> QueryDef(streamQualityScore,
-      Some(TextQueries.qualityClassifierSql), benchmark = true),
+      Some(TextQueries.qualityClassifierSql)),
     "st23_stream_media_decode" -> QueryDef(streamMediaDecode, Some(streamMediaDecodeSql)),
-    "st22_stream_index_dedup" -> QueryDef(streamIndexDedup, Some(TextQueries.dedupIncrementalSql), benchmark = true),
-    "st21_stream_sample"     -> QueryDef(streamSample, Some(TextQueries.prioritySampleSql), benchmark = true),
-    "st20_stream_ewma"       -> QueryDef(streamEwma, Some(streamEwmaSql), benchmark = true),
+    "st22_stream_index_dedup" -> QueryDef(streamIndexDedup, Some(TextQueries.dedupIncrementalSql)),
+    "st21_stream_sample"     -> QueryDef(streamSample, Some(TextQueries.prioritySampleSql)),
+    "st20_stream_ewma"       -> QueryDef(streamEwma, Some(streamEwmaSql)),
     "st18_state_reader"      -> QueryDef(stateReader, Some(stateReaderSql)),
     "st19_restart_exactly_once" -> QueryDef(streamRestart, Some(streamRestartSql)),
     "st12_late_data_drop"    -> QueryDef(streamLateData, Some(streamLateDataSql)),
     "st13_update_mode"       -> QueryDef(streamUpdateMode, Some(streamUpdateModeSql)),
     "st14_outer_stream_join" -> QueryDef(streamOuterJoin, Some(streamOuterJoinSql)),
-    "st15_transform_with_state" -> QueryDef(streamTws, Some(streamTwsSql), benchmark = true),
+    "st15_transform_with_state" -> QueryDef(streamTws, Some(streamTwsSql)),
     "st16_stream_ohlc"       -> QueryDef(streamOhlc, Some(streamOhlcSql)),
     "st17_chained_agg"       -> QueryDef(streamChained, Some(streamChainedSql)),
     "st11_foreach_batch"     -> QueryDef(streamForeachBatch, Some(streamForeachBatchSql)),
     "st10_stream_multibatch" -> QueryDef(streamMultibatch, Some(streamMultibatchSql)),
     "st09_stream_static_join" -> QueryDef(streamStaticJoin, Some(streamStaticJoinSql)),
     "st01_stream_tumbling"  -> QueryDef(streamTumbling, Some(streamTumblingSql)),
-    "st08_stream_session"   -> QueryDef(streamSession, Some(streamSessionSql), benchmark = true),
+    "st08_stream_session"   -> QueryDef(streamSession, Some(streamSessionSql)),
     "st07_stream_file_sink" -> QueryDef(streamParquetSink, Some(streamParquetSinkSql)),
     "st06_stream_join"      -> QueryDef(streamStreamJoin, Some(streamStreamJoinSql)),
     "st02_stream_wordcount" -> QueryDef(streamWordcount, Some(streamWordcountSql)),

@@ -2728,7 +2728,7 @@ object TextQueries {
   /** Release every swap-tracked cache (tx28/tx31). The persists exist
     * for INTRA-query reuse (one corpus pass feeding several consumers);
     * a timed benchmark must not let run N+1 ride run N's resident
-    * rollup, so [[graft.Bench]] calls this before each timed run — the
+    * rollup, so perfbench's `Probe` calls this between timed runs — the
     * measured number is the cold cost a fresh query pays. (tx27/tx33/
     * tx39 carried slots here until round 10, when measurement showed
     * ReuseExchange already shares their subplans and the cache boundary
@@ -4878,59 +4878,59 @@ object TextQueries {
   }
 
   val defs: Map[String, QueryDef] = Map(
-    "tx44_modern_pipeline"    -> QueryDef(modernPipeline, Some(modernPipelineSql), benchmark = true),
-    "tx45_source_kl"          -> QueryDef(sourceKl, Some(sourceKlSql), benchmark = true),
-    "tx48_ngram_novelty"      -> QueryDef(ngramNovelty, Some(ngramNoveltySql), benchmark = true),
-    "tx46_threshold_prune"    -> QueryDef(thresholdPrune, Some(thresholdPruneSql), benchmark = true),
+    "tx44_modern_pipeline"    -> QueryDef(modernPipeline, Some(modernPipelineSql)),
+    "tx45_source_kl"          -> QueryDef(sourceKl, Some(sourceKlSql)),
+    "tx48_ngram_novelty"      -> QueryDef(ngramNovelty, Some(ngramNoveltySql)),
+    "tx46_threshold_prune"    -> QueryDef(thresholdPrune, Some(thresholdPruneSql)),
     "tx47_epoch_allocation"   -> QueryDef(epochAllocation, Some(epochAllocationSql)),
-    "tx43_repetition_score"   -> QueryDef(repetitionScore, Some(repetitionScoreSql), benchmark = true),
-    "tx41_sequence_packing"   -> QueryDef(sequencePacking, Some(sequencePackingSql), benchmark = true),
+    "tx43_repetition_score"   -> QueryDef(repetitionScore, Some(repetitionScoreSql)),
+    "tx41_sequence_packing"   -> QueryDef(sequencePacking, Some(sequencePackingSql)),
     "tx53_packing_sweep"      -> QueryDef(packingSweep, Some(packingSweepSql)),
-    "tx40_quality_classifier" -> QueryDef(qualityClassifier, Some(qualityClassifierSql), benchmark = true),
-    "tx42_classifier_curation" -> QueryDef(classifierCuration, Some(classifierCurationSql), benchmark = true),
-    "tx49_calibration_curve"  -> QueryDef(calibrationCurve, Some(calibrationCurveSql), benchmark = true),
-    "tx28_dsir_select"       -> QueryDef(dsirSelect, Some(dsirSelectSql), benchmark = true),
+    "tx40_quality_classifier" -> QueryDef(qualityClassifier, Some(qualityClassifierSql)),
+    "tx42_classifier_curation" -> QueryDef(classifierCuration, Some(classifierCurationSql)),
+    "tx49_calibration_curve"  -> QueryDef(calibrationCurve, Some(calibrationCurveSql)),
+    "tx28_dsir_select"       -> QueryDef(dsirSelect, Some(dsirSelectSql)),
     "tx29_quality_prune"     -> QueryDef(qualityPrune, Some(qualityPruneSql)),
-    "tx30_priority_sample"   -> QueryDef(prioritySample, Some(prioritySampleSql), benchmark = true),
-    "tx31_bpe_train"         -> QueryDef(bpeTrain, Some(bpeTrainSql), benchmark = true),
-    "tx35_unigram_train"     -> QueryDef(unigramTrain, Some(unigramTrainSql), benchmark = true),
-    "tx36_unigram_encode"    -> QueryDef(unigramEncode, Some(unigramEncodeSql), benchmark = true),
-    "tx37_unigram_score"     -> QueryDef(unigramScore, Some(unigramScoreSql), benchmark = true),
-    "tx50_tokenizer_fertility" -> QueryDef(tokenizerFertility, Some(unigramFertilitySql), benchmark = true),
-    "tx32_bpe_encode"        -> QueryDef(bpeEncode, Some(bpeEncodeSql), benchmark = true),
-    "tx33_ccnet_buckets"     -> QueryDef(ccnetBuckets, Some(ccnetBucketsSql), benchmark = true),
-    "tx34_leakage_safe_split" -> QueryDef(leakageSafeSplit, Some(leakageSafeSplitSql), benchmark = true),
-    "tx26_bpe_pair_counts"   -> QueryDef(bpePairCounts, Some(bpePairCountsSql), benchmark = true),
-    "tx27_bigram_lm_score"   -> QueryDef(bigramLmScore, Some(bigramLmScoreSql), benchmark = true),
-    "tx39_kneser_ney_score"  -> QueryDef(knBigramScore, Some(knBigramScoreSql), benchmark = true),
-    "dd15_winnowing_pairs"   -> QueryDef(winnowingPairs, Some(winnowingPairsSql), benchmark = true),
+    "tx30_priority_sample"   -> QueryDef(prioritySample, Some(prioritySampleSql)),
+    "tx31_bpe_train"         -> QueryDef(bpeTrain, Some(bpeTrainSql)),
+    "tx35_unigram_train"     -> QueryDef(unigramTrain, Some(unigramTrainSql)),
+    "tx36_unigram_encode"    -> QueryDef(unigramEncode, Some(unigramEncodeSql)),
+    "tx37_unigram_score"     -> QueryDef(unigramScore, Some(unigramScoreSql)),
+    "tx50_tokenizer_fertility" -> QueryDef(tokenizerFertility, Some(unigramFertilitySql)),
+    "tx32_bpe_encode"        -> QueryDef(bpeEncode, Some(bpeEncodeSql)),
+    "tx33_ccnet_buckets"     -> QueryDef(ccnetBuckets, Some(ccnetBucketsSql)),
+    "tx34_leakage_safe_split" -> QueryDef(leakageSafeSplit, Some(leakageSafeSplitSql)),
+    "tx26_bpe_pair_counts"   -> QueryDef(bpePairCounts, Some(bpePairCountsSql)),
+    "tx27_bigram_lm_score"   -> QueryDef(bigramLmScore, Some(bigramLmScoreSql)),
+    "tx39_kneser_ney_score"  -> QueryDef(knBigramScore, Some(knBigramScoreSql)),
+    "dd15_winnowing_pairs"   -> QueryDef(winnowingPairs, Some(winnowingPairsSql)),
     "tx25_pretokenize"       -> QueryDef(pretokenStats, Some(pretokenStatsSql)),
-    "wc_reference_wordcount" -> QueryDef(wordcount, Some(wordcountSql), benchmark = true),
+    "wc_reference_wordcount" -> QueryDef(wordcount, Some(wordcountSql)),
     "dd08_contamination"     -> QueryDef(contamination, Some(contaminationSql)),
     "dd13_bloom_contamination" -> QueryDef(bloomContamination, Some(bloomContaminationSql)),
     "tx11_rarity_score"      -> QueryDef(rarityScore, Some(rarityScoreSql)),
     "tx10_sql_native_fns"    -> QueryDef(sqlNativeFns, Some(sqlNativeFnsSql)),
     "dd01_exact"             -> QueryDef(dedupExact, Some(dedupExactSql)),
     "dd06_exact_by_hash"     -> QueryDef(dedupExactHash, Some(dedupExactSql)),
-    "dd02_jaccard_pairs"     -> QueryDef(dedupJaccard, Some(dedupJaccardSql), benchmark = true),
-    "dd03_minhash_pairs"     -> QueryDef(dedupMinhash, Some(dedupMinhashSql), benchmark = true),
-    "dd20_lsh_tuning_curve"  -> QueryDef(dedupLshCurve, Some(dedupLshCurveSql), benchmark = true),
+    "dd02_jaccard_pairs"     -> QueryDef(dedupJaccard, Some(dedupJaccardSql)),
+    "dd03_minhash_pairs"     -> QueryDef(dedupMinhash, Some(dedupMinhashSql)),
+    "dd20_lsh_tuning_curve"  -> QueryDef(dedupLshCurve, Some(dedupLshCurveSql)),
     "dd04_simhash_pairs"     -> QueryDef(dedupSimhash, Some(dedupSimhashSql)),
     "dd05_ngram_jaccard"     -> QueryDef(dedupNgram, Some(dedupNgramSql)),
-    "dd18_containment_dedup" -> QueryDef(dedupContainment, Some(dedupContainmentSql), benchmark = true),
+    "dd18_containment_dedup" -> QueryDef(dedupContainment, Some(dedupContainmentSql)),
     "dd19_dup_provenance"    -> QueryDef(dupProvenance, Some(dupProvenanceSql)),
     "dd21_uncapped_jaccard"  -> QueryDef(dedupJaccardUncapped,
-      Some(dedupJaccardUncappedSql), benchmark = true),
-    "dd11_span_dedup"        -> QueryDef(dedupSpansQ, Some(dedupSpansSql), benchmark = true),
-    "dd16_substring_dedup"   -> QueryDef(dedupSubstringsQ, Some(dedupSubstringsSql), benchmark = true),
+      Some(dedupJaccardUncappedSql)),
+    "dd11_span_dedup"        -> QueryDef(dedupSpansQ, Some(dedupSpansSql)),
+    "dd16_substring_dedup"   -> QueryDef(dedupSubstringsQ, Some(dedupSubstringsSql)),
     "dd17_index_compaction"  -> QueryDef(indexCompaction, Some(dedupIncrementalSql)),
     "tx16_gopher_rules"      -> QueryDef(gopherRules, Some(gopherRulesSql)),
-    "dd12_fuzzy_name_join"   -> QueryDef(fuzzyNameJoin, Some(fuzzyNameJoinSql), benchmark = true),
-    "tx17_full_pipeline"     -> QueryDef(fullPipeline, Some(fullPipelineSql), benchmark = true),
+    "dd12_fuzzy_name_join"   -> QueryDef(fuzzyNameJoin, Some(fuzzyNameJoinSql)),
+    "tx17_full_pipeline"     -> QueryDef(fullPipeline, Some(fullPipelineSql)),
     "tx01_text_stats"        -> QueryDef(textStats, Some(textStatsSql)),
     "tx02_quality_score"     -> QueryDef(textQuality, Some(textQualitySql)),
     "tx03_langid"            -> QueryDef(langid, Some(langidSql)),
-    "tx04_fingerprint"       -> QueryDef(fingerprint, Some(fingerprintSql), benchmark = true),
+    "tx04_fingerprint"       -> QueryDef(fingerprint, Some(fingerprintSql)),
     "tx05_tfidf_top_terms"   -> QueryDef(tfidfTopTerms, Some(tfidfTopTermsSql)),
     "mm01_decode_features"   -> QueryDef(multimodal, Some(multimodalSql)),
     "mm02_payload_bytes"     -> QueryDef(mediaBytes, Some(mediaBytesSql)),
@@ -4947,15 +4947,15 @@ object TextQueries {
     "tx20_bigrams"           -> QueryDef(bigrams, Some(bigramsSql)),
     "tx21_budget_select"     -> QueryDef(budgetSelect, Some(budgetSelectSql)),
     "tx06_clean_stopwords"   -> QueryDef(cleanStopwords, Some(cleanStopwordsSql)),
-    "tx07_chunking"          -> QueryDef(chunking, Some(chunkingSql), benchmark = true),
+    "tx07_chunking"          -> QueryDef(chunking, Some(chunkingSql)),
     "tx08_det_sample"        -> QueryDef(detSample, Some(detSampleSql)),
     "tx18_balanced_sample"   -> QueryDef(balancedSample, Some(balancedSampleSql)),
     "tx19_bm25"              -> QueryDef(bm25, Some(bm25Sql)),
     "tx09_seq_pack"          -> QueryDef(seqPack, Some(seqPackSql)),
-    "dd07_dup_clusters"      -> QueryDef(dupClusters, Some(dupClustersSql), benchmark = true),
+    "dd07_dup_clusters"      -> QueryDef(dupClusters, Some(dupClustersSql)),
     "dd14_cluster_keep_best" -> QueryDef(clusterKeepBest, Some(clusterKeepBestSql)),
     "dd09_incremental"       -> QueryDef(dedupIncremental, Some(dedupIncrementalSql)),
-    "dd10_incremental_lookup" -> QueryDef(dedupIncrementalLookup, Some(dedupIncrementalSql), benchmark = true),
+    "dd10_incremental_lookup" -> QueryDef(dedupIncrementalLookup, Some(dedupIncrementalSql)),
     "tx12_repetition"        -> QueryDef(repetition, Some(repetitionSql)),
     "tx13_pii_scrub"         -> QueryDef(piiScrub, Some(piiScrubSql)),
     "tx14_frequent_tokens"   -> QueryDef(frequentTokens, Some(frequentTokensSql)),

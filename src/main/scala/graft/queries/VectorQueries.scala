@@ -1008,24 +1008,24 @@ object VectorQueries {
   }
 
   val defs: Map[String, QueryDef] = Map(
-    "ann19_retrieval_metrics" -> QueryDef(annRetrievalMetrics, Some(annRetrievalMetricsSql), benchmark = true),
-    "ann20_centroid_drift"  -> QueryDef(annCentroidDrift, Some(annCentroidDriftSql), benchmark = true),
-    "ann21_nprobe_curve"    -> QueryDef(annNprobeCurve, Some(annNprobeCurveSql), benchmark = true),
-    "ann18_class_margin"    -> QueryDef(annClassMargin, Some(annClassMarginSql), benchmark = true),
-    "ann17_hard_negatives"  -> QueryDef(annHardNeg, Some(annHardNegSql), benchmark = true),
-    "ann16_kmeans_curve"    -> QueryDef(annKmeansCurve, Some(annKmeansCurveSql), benchmark = true),
-    "ann15_jl_recall"       -> QueryDef(annJlRecall, Some(annJlRecallSql), benchmark = true),
-    "ann14_cluster_sample"  -> QueryDef(annClusterSample, Some(annClusterSampleSql), benchmark = true),
-    "ann13_sq_rescore"      -> QueryDef(annSq, Some(annSqSql), benchmark = true),
-    "ann12_ivf_recall"      -> QueryDef(annIvfRecall, Some(annIvfRecallSql), benchmark = true),
+    "ann19_retrieval_metrics" -> QueryDef(annRetrievalMetrics, Some(annRetrievalMetricsSql)),
+    "ann20_centroid_drift"  -> QueryDef(annCentroidDrift, Some(annCentroidDriftSql)),
+    "ann21_nprobe_curve"    -> QueryDef(annNprobeCurve, Some(annNprobeCurveSql)),
+    "ann18_class_margin"    -> QueryDef(annClassMargin, Some(annClassMarginSql)),
+    "ann17_hard_negatives"  -> QueryDef(annHardNeg, Some(annHardNegSql)),
+    "ann16_kmeans_curve"    -> QueryDef(annKmeansCurve, Some(annKmeansCurveSql)),
+    "ann15_jl_recall"       -> QueryDef(annJlRecall, Some(annJlRecallSql)),
+    "ann14_cluster_sample"  -> QueryDef(annClusterSample, Some(annClusterSampleSql)),
+    "ann13_sq_rescore"      -> QueryDef(annSq, Some(annSqSql)),
+    "ann12_ivf_recall"      -> QueryDef(annIvfRecall, Some(annIvfRecallSql)),
     "ann11_mmr_topk"        -> QueryDef(annMmr, Some(annMmrSql)),
     "ann10_maxsim"          -> QueryDef(annMaxSim, Some(annMaxSimSql)),
     "ann09_radius_search"   -> QueryDef(annRadius, Some(annRadiusSql)),
-    "ann08_semantic_dedup"  -> QueryDef(semDedup, Some(semDedupSql), benchmark = true),
+    "ann08_semantic_dedup"  -> QueryDef(semDedup, Some(semDedupSql)),
     "ann06_ivfpq_topk"      -> QueryDef(annIvfPq, Some(annIvfPqSql)),
-    "ann01_bruteforce_topk" -> QueryDef(annBrute, Some(annBruteSql), benchmark = true),
+    "ann01_bruteforce_topk" -> QueryDef(annBrute, Some(annBruteSql)),
     "ann07_filtered_topk"   -> QueryDef(annFiltered, Some(annFilteredSql)),
-    "ann02_lsh_topk"        -> QueryDef(annLsh, Some(annLshSql), benchmark = true),
+    "ann02_lsh_topk"        -> QueryDef(annLsh, Some(annLshSql)),
     "ann05_ivf_topk"        -> QueryDef(annIvf, Some(annIvfSql)),
     "ann03_embedding_dups"  -> QueryDef(embDup, Some(embDupSql)),
     "ann04_vector_stats"    -> QueryDef(vecStats, Some(vecStatsSql)),

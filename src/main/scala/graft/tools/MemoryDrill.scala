@@ -17,9 +17,11 @@ import org.apache.spark.sql.functions._
   *
   * Drive it twice and diff the digests:
   * {{{
-  * SPARK_DRIVER_MEM=24g SPARK_GRAFT_SF_DIR=/tmp/sf1 sbt "runMain graft.tools.MemoryDrill"
-  * SPARK_DRIVER_MEM=4g  SPARK_GRAFT_SF_DIR=/tmp/sf1 sbt "runMain graft.tools.MemoryDrill"
+  * SPARK_DRIVER_MEM=24g sbt "runMain graft.tools.MemoryDrill /tmp/sf1"
+  * SPARK_DRIVER_MEM=4g  sbt "runMain graft.tools.MemoryDrill /tmp/sf1"
   * }}}
+  * The first argument is the fixture directory; any further arguments
+  * name the queries to run instead of [[DefaultQueries]].
   * Identical digests + nonzero spill in the 4g run = completed-with-
   * spill, not luck. Output: one JSON line per query plus a trailing
   * summary line, also written to `target/memdrill_<heap>.json`.
@@ -53,10 +55,10 @@ object MemoryDrill {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/sf1")
+    val sfDir = args.headOption.getOrElse("/tmp/sf1")
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val heap  = sys.env.getOrElse("SPARK_DRIVER_MEM", "24g")
-    val names = if (args.nonEmpty) args.toSeq else DefaultQueries
+    val names = if (args.length > 1) args.toSeq.tail else DefaultQueries
     val spark = graft.core.GraftSession.builder(s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val listener = new SpillListener

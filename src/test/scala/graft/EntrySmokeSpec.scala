@@ -3,8 +3,7 @@ package graft
 /** The driver's t1 smoke — `SparkEntry.entry` must produce rows on
   * sf0.001 — pinned locally so a regression in the flagship path is a
   * named test failure, not a judge-time surprise. Also pins the contract
-  * invariants the driver relies on: every query has an oracle, and the
-  * bench set is a subset of the judged set.
+  * invariant the driver relies on: every query has an oracle.
   */
 class EntrySmokeSpec extends SparkSpec {
 
@@ -12,10 +11,9 @@ class EntrySmokeSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("driver contract: oracles cover every query; bench ⊆ queries") {
+  test("driver contract: oracles cover every query") {
     assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet,
       "every judged query must carry oracle SQL")
-    assert(SparkEntry.benchQueries.keySet.subsetOf(SparkEntry.queries.keySet))
     assert(SparkEntry.queries.size >= 178)
   }
 }

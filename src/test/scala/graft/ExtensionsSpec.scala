@@ -54,6 +54,14 @@ class ExtensionsSpec extends SparkSpec {
     assert(viaSql == viaOp)
   }
 
+  test("a GraftSession starts batch exchanges at 2 × SPARK_GRAFT_CPUS partitions") {
+    // the core count is the session's only environment input: no fixture
+    // directory (SPARK_GRAFT_SF_DIR or any other) changes the width
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    assert(spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum") ==
+      (cpus * 2).toString)
+  }
+
   test("non-literal parameters to parameterized functions are rejected") {
     GraftExtensions.register(spark)
     val e = intercept[Exception] {

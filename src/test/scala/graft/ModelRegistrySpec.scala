@@ -18,17 +18,6 @@ class ModelRegistrySpec extends SparkSpec {
     assert(a eq b)
   }
 
-  test("memo records first-use train wall under the metric name, once") {
-    val k = s"spec_metric_${System.nanoTime()}"
-    val m = s"spec_query_$k"
-    assert(!ModelRegistry.trainSeconds.contains(m))
-    ModelRegistry.memo(spark, k, metric = m) { Thread.sleep(5); "v" }
-    val t1 = ModelRegistry.trainSeconds(m)
-    assert(t1 > 0.0)
-    ModelRegistry.memo(spark, k, metric = m)("v2") // served — no retrain
-    assert(ModelRegistry.trainSeconds(m) == t1)
-  }
-
   test("freeze/toDF round-trips schema and values exactly") {
     import org.apache.spark.sql.functions._
     val df = spark.range(1).select(

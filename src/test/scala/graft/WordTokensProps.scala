@@ -110,21 +110,52 @@ object WordTokensProps extends Properties("WordTokens") {
     Gen.choose(1, 60).map(n => (0 until n).map(i => s"W$i,").grouped(7).map(_.mkString(" \u000B")).toSeq),
     Gen.listOf(Gen.oneOf("hot", "HOT!", "h-ot", "Hot\r\nhot", "cold hot", "")))
 
+  /** `collectSorted` and `writeSorted` (part files read in name order) of
+    * `lines` spread over `parts` partitions both equal the transcription.
+    */
+  private def sortedMatches(lines: Seq[String], parts: Int): Prop = {
+    val session = spark
+    import session.implicits._
+    val df = session.createDataset(session.sparkContext.parallelize(lines, parts)).toDF("value")
+    val want = transcription(lines)
+    val collected = WordCount.collectSorted(df)
+    val out = Files.createTempDirectory(Paths.get("target"), "wc_prop")
+    WordCount.writeSorted(df, out.toString)
+    val written = Files.list(out).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toSeq.sortBy(_.getFileName.toString)
+      .flatMap(p => Files.readAllLines(p).asScala)
+    Files.walk(out).sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+    val shown = lines.map(_.take(200).flatMap(c => if (c < ' ' || c > '~') f"\\u${c.toInt}%04X" else c.toString))
+    (collected == want) :| s"lines $shown: collectSorted $collected want $want" &&
+      (written == want) :| s"writeSorted $written want $want"
+  }
+
+  /** One line of about 2 MB: 300,000 tokens over a 4,000-word vocabulary
+    * (mixed case, punctuation, all six separators), so that one row feeds
+    * one task a multi-MB token array.
+    */
+  private lazy val longLine: String = {
+    val rnd = new java.util.SplittableRandom(17)
+    val seps = Array(" ", "\t", "\u000B", "\f", "\r", "\n", "  ")
+    val sb = new StringBuilder
+    for (_ <- 0 until 300000) {
+      val w = rnd.nextInt(4000)
+      sb.append(if (w % 7 == 0) s"W$w!" else s"w-$w").append(seps(rnd.nextInt(seps.length)))
+    }
+    sb.toString
+  }
+
+  /** Fixed inputs the generator reaches rarely or never: most partitions
+    * empty, every partition empty, only blank lines, and a single
+    * multi-MB line.
+    */
+  private def edgeInputs: Seq[(Seq[String], Int)] = Seq(
+    (Seq("b a", "A"), 8),
+    (Seq.empty, 4),
+    (Seq("", "  ", "\t\u000B\f", "\r\n"), 3),
+    (Seq(longLine), 3))
+
   property("WordCount collectSorted and writeSorted == plain-Scala transcription, >= 3 partitions") =
-    sparkCheck(forAll(corpus, Gen.choose(3, 5)) { (lines, parts) =>
-      val session = spark
-      import session.implicits._
-      val df = session.createDataset(session.sparkContext.parallelize(lines, parts)).toDF("value")
-      val want = transcription(lines)
-      val collected = WordCount.collectSorted(df)
-      val out = Files.createTempDirectory(Paths.get("target"), "wc_prop")
-      WordCount.writeSorted(df, out.toString)
-      val written = Files.list(out).iterator().asScala
-        .filter(_.getFileName.toString.startsWith("part-")).toSeq.sortBy(_.getFileName.toString)
-        .flatMap(p => Files.readAllLines(p).asScala)
-      Files.walk(out).sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
-      val shown = lines.map(_.flatMap(c => if (c < ' ' || c > '~') f"\\u${c.toInt}%04X" else c.toString))
-      (collected == want) :| s"lines $shown: collectSorted $collected want $want" &&
-        (written == want) :| s"writeSorted $written want $want"
-    })
+    sparkCheck(forAll(corpus, Gen.choose(3, 5))(sortedMatches)) &&
+      edgeInputs.map { case (lines, parts) => sortedMatches(lines, parts) }.reduce(_ && _)
 }
