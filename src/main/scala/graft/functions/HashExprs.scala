@@ -3,10 +3,13 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnShim
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the sketching hot path (MinHash / LSH /
   * SimHash over token arrays).
@@ -20,6 +23,12 @@ import org.apache.spark.sql.types._
   * whole-stage codegen via a single static call, and keep the surrounding
   * projection codegen'd.
   *
+  * `text_minhash_buckets` and `text_token_hashes` go one step further for
+  * MinHash dedup: they read the text itself, not a token array, and
+  * tokenize it in the same loop ([[StringImpl.textTokens]]), so no per-token
+  * string exists. [[TextFunctions.tokenize]] (with `lower` and
+  * `array_distinct`) is the specification of that tokenization.
+  *
   * Hashing is Spark's own XXH64 (bit-identical to `functions.xxhash64`,
   * seed 42), so sketches are deterministic across JVMs and sessions.
   */
@@ -28,55 +37,97 @@ object HashImpl {
   /** Second seed for double hashing (golden-ratio constant, odd). */
   final val Seed2 = 0x9e3779b97f4a7c15L
 
-  private def xx(s: org.apache.spark.unsafe.types.UTF8String, seed: Long): Long =
+  private def xx(s: UTF8String, seed: Long): Long =
     XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, seed)
 
   /** k-min signature: sig(i) = min over tokens of (h1 + i·h2) (double
     * hashing approximates k independent permutations — Kirsch &
     * Mitzenmacher 2006). Empty arrays yield Long.MaxValue sentinels.
     */
-  def minhash(tokens: ArrayData, k: Int): ArrayData = {
-    val mins = new Array[Long](k)
-    java.util.Arrays.fill(mins, Long.MaxValue)
+  def minhash(tokens: ArrayData, k: Int): ArrayData =
+    new GenericArrayData(minhashSlots(tokens, k))
+
+  private def minhashSlots(tokens: ArrayData, k: Int): Array[Long] = {
+    val mins = newSlots(k)
     val n = tokens.numElements()
     var i = 0
     while (i < n) {
       val t = tokens.getUTF8String(i)
-      if (t != null) {
-        val h1 = xx(t, Seed1)
-        val h2 = xx(t, Seed2)
-        var j = 0
-        var v = h1
-        while (j < k) {
-          if (v < mins(j)) mins(j) = v
-          v += h2
-          j += 1
-        }
-      }
+      if (t != null) foldSlots(mins, xx(t, Seed1), xx(t, Seed2))
       i += 1
     }
-    new GenericArrayData(mins)
+    mins
+  }
+
+  private def newSlots(k: Int): Array[Long] = {
+    val mins = new Array[Long](k)
+    java.util.Arrays.fill(mins, Long.MaxValue)
+    mins
+  }
+
+  private def foldSlots(mins: Array[Long], h1: Long, h2: Long): Unit = {
+    var j = 0
+    var v = h1
+    while (j < mins.length) {
+      if (v < mins(j)) mins(j) = v
+      v += h2
+      j += 1
+    }
   }
 
   /** One LSH bucket key per band: fold the band's `rowsPerBand` signature
     * slots into a 64-bit key via chained `XXH64.hashLong`, seeded by the
     * band index (so identical slices in different bands never collide).
     */
-  def minhashBuckets(tokens: ArrayData, bands: Int, rowsPerBand: Int): ArrayData = {
-    val sig = minhash(tokens, bands * rowsPerBand).asInstanceOf[GenericArrayData]
+  def minhashBuckets(tokens: ArrayData, bands: Int, rowsPerBand: Int): ArrayData =
+    bandKeys(minhashSlots(tokens, bands * rowsPerBand), bands, rowsPerBand)
+
+  private def bandKeys(sig: Array[Long], bands: Int, rowsPerBand: Int): ArrayData = {
     val out = new Array[Long](bands)
     var b = 0
     while (b < bands) {
       var acc = b.toLong
       var r = 0
       while (r < rowsPerBand) {
-        acc = XXH64.hashLong(sig.getLong(b * rowsPerBand + r), acc)
+        acc = XXH64.hashLong(sig(b * rowsPerBand + r), acc)
         r += 1
       }
       out(b) = acc
       b += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  /** [[minhashBuckets]] of `array_distinct(tokenize(lower(text)))`, from
+    * the text's bytes ([[StringImpl.textTokens]]); the seed-42 hash the
+    * split already took is the signature's h1.
+    */
+  def textMinhashBuckets(text: UTF8String, bands: Int, rowsPerBand: Int,
+      useICU: Boolean): ArrayData = {
+    val toks = StringImpl.textTokens(text, useICU)
+    val mins = newSlots(bands * rowsPerBand)
+    var i = 0
+    while (i < toks.n) {
+      foldSlots(mins, toks.hash(i), toks.hashAt(i, Seed2))
+      i += 1
+    }
+    bandKeys(mins, bands, rowsPerBand)
+  }
+
+  /** The sorted seed-42 xxhash64 values of the distinct non-empty tokens
+    * of `tokenize(lower(text))`: the exact-Jaccard verification set.
+    */
+  def textTokenHashes(text: UTF8String, useICU: Boolean): ArrayData = {
+    val toks = StringImpl.textTokens(text, useICU)
+    val out = new Array[Long](toks.n)
+    var n = 0
+    var i = 0
+    while (i < toks.n) {
+      if (toks.end(i) > toks.start(i)) { out(n) = toks.hash(i); n += 1 }
+      i += 1
+    }
+    java.util.Arrays.sort(out, 0, n)
+    UnsafeArrayData.fromPrimitiveArray(out, Platform.LONG_ARRAY_OFFSET, n, 8)
   }
 
   /** 0-based index of the first position where both long arrays agree;
@@ -345,6 +396,52 @@ case class MinHashBuckets(child: Expression, bands: Int, rowsPerBand: Int)
     copy(child = newChild)
 }
 
+/** Input contract of the sketch kernels that read a text column directly,
+  * and Spark's case-mapping setting, read the way `Lower` reads it.
+  */
+trait TextKernelExpression extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    child.dataType match {
+      case StringType => TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires string input, got ${other.simpleString}")
+    }
+  protected lazy val useICU: Boolean = SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+}
+
+/** `text_minhash_buckets(text, bands, rowsPerBand)` → the LSH bucket keys
+  * of `minhash_buckets(array_distinct(tokenize(lower(text))), bands,
+  * rowsPerBand)`, bit for bit, straight from the text's bytes.
+  */
+case class TextMinHashBuckets(child: Expression, bands: Int, rowsPerBand: Int)
+    extends TextKernelExpression {
+  require(bands > 0 && rowsPerBand > 0, "bands and rowsPerBand must be positive")
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "text_minhash_buckets"
+  override protected def nullSafeEval(input: Any): Any =
+    HashImpl.textMinhashBuckets(input.asInstanceOf[UTF8String], bands, rowsPerBand, useICU)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c =>
+      s"graft.functions.HashImpl.textMinhashBuckets($c, $bands, $rowsPerBand, $useICU)")
+  override protected def withNewChildInternal(newChild: Expression): TextMinHashBuckets =
+    copy(child = newChild)
+}
+
+/** `text_token_hashes(text)` → array<bigint> equal to
+  * `sort_array(transform(filter(array_distinct(tokenize(lower(text))),
+  * t -> length(t) > 0), t -> xxhash64(t)))`, straight from the text's bytes.
+  */
+case class TextTokenHashes(child: Expression) extends TextKernelExpression {
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "text_token_hashes"
+  override protected def nullSafeEval(input: Any): Any =
+    HashImpl.textTokenHashes(input.asInstanceOf[UTF8String], useICU)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpl.textTokenHashes($c, $useICU)")
+  override protected def withNewChildInternal(newChild: Expression): TextTokenHashes =
+    copy(child = newChild)
+}
+
 /** `fnv64(text)` → bigint FNV-1a fingerprint over code points. One native
   * loop per row; replaces the interpreted per-character
   * `aggregate(transform(split(...)))` HOF fold (CodegenFallback, ~100×
@@ -427,6 +524,10 @@ object HashExprs {
     ColumnShim.column(MinHashSig(ColumnShim.expression(tokens), k))
   def minhashBuckets(tokens: Column, bands: Int, rowsPerBand: Int): Column =
     ColumnShim.column(MinHashBuckets(ColumnShim.expression(tokens), bands, rowsPerBand))
+  def textMinhashBuckets(text: Column, bands: Int, rowsPerBand: Int): Column =
+    ColumnShim.column(TextMinHashBuckets(ColumnShim.expression(text), bands, rowsPerBand))
+  def textTokenHashes(text: Column): Column =
+    ColumnShim.column(TextTokenHashes(ColumnShim.expression(text)))
   def simhash64(tokens: Column): Column =
     ColumnShim.column(SimHash64(ColumnShim.expression(tokens)))
   def winnowFps(tokens: Column, k: Int, w: Int): Column =

@@ -35,6 +35,9 @@ object TextFunctions {
     * token (same as Java's `"".split("\\s+")`), removed downstream by
     * [[isNonEmptyToken]]. The whitespace class is written out (see object
     * doc) so the DuckDB oracles can pin the identical RE2 class.
+    * `array_distinct(tokenize(lower(text)))` is also the specification of
+    * the MinHash kernels `text_minhash_buckets` and `text_token_hashes`
+    * ([[HashExprs]]), which split the text's bytes natively.
     */
   def tokenize(text: Column): Column = split(trim(text), "[\\t\\n\\x0B\\f\\r ]+")
 

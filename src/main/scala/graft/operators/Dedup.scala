@@ -380,31 +380,28 @@ object Dedup {
     HashExprs.minhashSig(
       array_distinct(TextFunctions.tokenize(lower(textCol))), k)
 
-  /** One MinHash/LSH sketch per document from ONE tokenization:
-    * (doc_id, bk, toks) — `bk` the per-band LSH bucket keys
-    * ([[graft.functions.MinHashBuckets]], band-salted so cross-band
-    * collisions are impossible), `toks` the sorted xxhash64 set of the
-    * non-blank tokens, the exact-Jaccard verification payload, so a
-    * per-pair intersection is a two-pointer merge over primitive longs (at
-    * 3M pairs × ~50 tokens the chance of a 64-bit collision moving a
-    * Jaccard count is ~1e-9). The blank token stays in `bk` and out of
-    * `toks`.
-    * The token array is its own projection, so both columns read one
-    * `array_distinct(tokenize(lower(text)))` (CollapseProject does not
-    * inline a non-trivial expression that is read twice). A native kernel
-    * for `toks` in place of the `transform` lambda saved ~2% task CPU on
-    * the perfbench dedup corpus and no wall time, so it was not kept.
+  /** One MinHash/LSH sketch per document: (doc_id, bk, toks) — `bk` the
+    * per-band LSH bucket keys ([[graft.functions.TextMinHashBuckets]],
+    * band-salted so cross-band collisions are impossible), `toks` the
+    * sorted xxhash64 set of the non-blank tokens
+    * ([[graft.functions.TextTokenHashes]]), the exact-Jaccard verification
+    * payload, so a per-pair intersection is a two-pointer merge over
+    * primitive longs (at 3M pairs × ~50 tokens the chance of a 64-bit
+    * collision moving a Jaccard count is ~1e-9). The blank token stays in
+    * `bk` and out of `toks`.
+    * Both columns are native kernels over the text bytes, bit-identical to
+    * `minhash_buckets` and `sort_array(transform(filter(...), xxhash64))`
+    * over `array_distinct(tokenize(lower(text)))`, so indexes written
+    * from that form stay valid. Each tokenizes the text itself, because
+    * after column pruning the band side evaluates only `bk` and the verify
+    * side only `toks`; neither builds a token string.
     */
   private def minhashSketch(
       docs: DataFrame, idCol: String, textCol: String,
       bands: Int, rowsPerBand: Int): DataFrame =
-    docs
-      .select(col(idCol).as("doc_id"),
-        array_distinct(TextFunctions.tokenize(lower(col(textCol)))).as("t"))
-      .select(col("doc_id"),
-        HashExprs.minhashBuckets(col("t"), bands, rowsPerBand).as("bk"),
-        sort_array(transform(filter(col("t"), t => length(t) > 0),
-          t => xxhash64(t))).as("toks"))
+    docs.select(col(idCol).as("doc_id"),
+      HashExprs.textMinhashBuckets(col(textCol), bands, rowsPerBand).as("bk"),
+      HashExprs.textTokenHashes(col(textCol)).as("toks"))
 
   /** (doc_id, band, bucket, bk) rows of a sketch, one per band. Outer
     * explode: `bk` always has exactly `bands` elements, and the non-outer

@@ -1,6 +1,11 @@
 package graft
 
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
+import graft.functions.{HashExprs, TextFunctions}
 import graft.operators.Dedup
 
 class DedupSpec extends SparkSpec {
@@ -155,6 +160,98 @@ class DedupSpec extends SparkSpec {
     val got = minhashPairs(corpus, 0.8)
     assert(got.keySet == Set((1L, 2L)))
     assertSamePairs(got, bruteForcePairs(corpus, 0.8))
+  }
+
+  /** Near-duplicates that only the tokenizer's edge cases make equal: case,
+    * tab and vertical-tab separators, İ (U+0130), a Greek final sigma and
+    * the KELVIN SIGN (U+212A, which lower-cases to ASCII `k`): 40 draws of
+    * 12 words plus a tag, each with two variants that replace one word;
+    * plus one cluster
+    * of 300 exact copies of a non-ASCII text, so the sketch kernels run
+    * their whole-string lower-casing path under a hot bucket in every band.
+    */
+  private lazy val trickyCorpus: Seq[(Long, String)] = {
+    val rnd = new scala.util.Random(61)
+    val vocab = Vector("alpha", "Beta", "GAMMA", "delta_x", "don't", "\u0130stanbul",
+      "\u039F\u0394\u039F\u03A3", "\u212Aelvin", "kelvin", "\u00E9t\u00E9", "ok", "zeta",
+      "eta", "theta", "iota", "kappa", "lambda", "mu", "nu", "xi")
+    val seps = Vector(" ", "\t", "\u000B", "  ", " \t ", "\n")
+    def render(words: Seq[String]) = words.map { w =>
+      val cased = rnd.nextInt(3) match {
+        case 0 => w
+        case 1 => w.toUpperCase(java.util.Locale.ROOT)
+        case _ => w.capitalize
+      }
+      cased + seps(rnd.nextInt(seps.size))
+    }.mkString
+    val near = (0 until 40).flatMap { c =>
+      val words = Seq.fill(12)(vocab(rnd.nextInt(vocab.size))) :+ s"doc$c"
+      Seq(words, words.updated(rnd.nextInt(12), s"w$c"), words.updated(rnd.nextInt(12), s"v$c"))
+        .map(render)
+    }
+    val hot = Seq.fill(300)("Dup \u0130\u0130 \u039F\u0394\u039F\u03A3\t\u212A x\u000By")
+    (near ++ hot).zipWithIndex.map { case (t, i) => (i.toLong, t) }
+  }
+
+  test("minhash dup pairs equal brute-force exact Jaccard on case/İ/Σ/K/VT near-dups and a 300-copy cluster") {
+    val corpus = trickyCorpus
+    val docs = spark.createDataset(spark.sparkContext.parallelize(corpus, 4)).toDF("doc_id", "text")
+    val got = Dedup.minhashDupPairs(docs, 0.8).as[(Long, Long, Double)].collect().toSeq
+    val byPair = got.map { case (a, b, j) => (a, b) -> j }.toMap
+    assert(byPair.size == got.size, "a pair was emitted twice")
+    val want = bruteForcePairs(corpus, 0.8)
+    assert(want.size > 300 * 299 / 2, s"too few near-dup pairs: ${want.size}")
+    assertSamePairs(byPair, want)
+  }
+
+  test("an index built by the pre-kernel sketch expressions answers dedupAgainstIndex like minhashIndex") {
+    val fixture = spark.read.parquet(s"$sf0001/documents.parquet").select($"doc_id", $"text")
+    val tricky = trickyCorpus.map { case (i, t) => (100000L + i, t) }.toDF("doc_id", "text")
+    val all = fixture.unionByName(tricky)
+    val corpus = all.where($"doc_id" < 400 || $"doc_id" % 2 === 0)
+    val batch = all.where(!($"doc_id" < 400 || $"doc_id" % 2 === 0))
+    val t = array_distinct(TextFunctions.tokenize(lower($"text")))
+    val toks = sort_array(transform(filter(t, x => length(x) > 0), x => xxhash64(x)))
+    val specIndex = corpus.select($"doc_id", HashExprs.minhashBuckets(t, 16, 4).as("bk"),
+      size(toks).as("n_tok"), toks.as("toks"))
+    val index = Dedup.minhashIndex(corpus)
+    assert(specIndex.schema == index.schema)
+    assert(specIndex.collect().toSet == index.collect().toSet)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_idx_compat").toString
+    def lookup(name: String, idx: org.apache.spark.sql.DataFrame) = {
+      Dedup.writeIndex(idx, name, s"$tmp/$name", 4)
+      Dedup.dedupAgainstIndex(batch, spark.table(s"${name}_buckets"), spark.table(s"${name}_docs"),
+          threshold = 0.8)
+        .as[(Long, Long, Double)].collect().toSet
+    }
+    val fromSpec = lookup("spec_compat_old_idx", specIndex)
+    assert(fromSpec.exists(_._1 >= 100000L) && fromSpec.exists(_._1 < 100000L), fromSpec.take(5))
+    assert(lookup("spec_compat_new_idx", index) == fromSpec)
+  }
+
+  test("minhashDupPairs plans both sketch columns as native kernels: no lower, split, array_distinct or lambda") {
+    @volatile var plan: String = null
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        val p = qe.executedPlan.toString
+        if (p.contains("text_token_hashes(")) plan = p
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val docs = trickyCorpus.take(60).toDF("doc_id", "text").repartition(3)
+      Dedup.minhashDupPairs(docs, 0.8).collect()
+      eventually(timeout(30.seconds))(assert(plan != null))
+    } finally spark.listenerManager.unregister(listener)
+    Seq("lower(", "split(", "array_distinct(", "lambdafunction").foreach { f =>
+      assert(!plan.contains(f), s"$f in\n$plan")
+    }
+    // each kernel is evaluated inside a whole-stage codegen stage
+    Seq("text_minhash_buckets(", "text_token_hashes(").foreach { k =>
+      assert(plan.linesIterator.exists(l => l.contains(k) && """\*\(\d+\) Project""".r.findFirstIn(l).nonEmpty),
+        s"$k not in a codegen'd projection:\n$plan")
+    }
   }
 
   test("contamination: only docs sharing an n-gram with the benchmark surface") {

@@ -1,20 +1,25 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.Prop.{forAll, propBoolean}
 
-import graft.functions.{HashExprs, HashImpl, TextFunctions}
+import graft.functions.{HashExprs, HashImpl, TextFunctions, TextMinHashBuckets, TextTokenHashes}
 import graft.operators.Dedup
 
 /** Property-based checks (SURVEY §5.2(2)) for the native sketch kernels —
   * pure JVM where they can be, so shrinkage and high case counts are cheap.
-  * The last two properties compare the MinHash sketch and candidate
-  * stage against the Spark forms they replaced, on the suites' shared
-  * session.
+  * The last three properties compare the MinHash sketch kernels and
+  * candidate stage against the Spark forms they replaced, on the suites'
+  * shared session.
   */
 object HashImplProps extends Properties("HashImpl") {
 
@@ -189,5 +194,70 @@ object HashImplProps extends Properties("HashImpl") {
         .select($"id_a", $"id_b").as[(Long, Long)].collect().sorted.toSeq
       val want = selfJoinCandidates(docs, bands, rows).as[(Long, Long)].collect().sorted.toSeq
       (got == want) :| s"bands $bands rows $rows: got $got want $want"
+    })
+
+  /** Pieces for the text kernels: the six separators, spaces against
+    * tabs, mixed case, `_`, punctuation, NBSP, U+0130, U+212A, a final
+    * sigma, a surrogate-pair emoji, and a small vocabulary so that tokens
+    * repeat.
+    */
+  private val textPiece: Gen[String] = Gen.oneOf(
+    Gen.oneOf(" ", "\t", "\n", "\u000B", "\f", "\r", "  ", " \t"),
+    Gen.oneOf("the", "The", "THE", "a_b", "A_B", "x", "don't", "--", "!?"),
+    Gen.oneOf("\u00A0", "\u0130", "\u212A", "\u212Aelvin", "kelvin",
+      "\u039F\u0394\u039F\u03A3 \u039F\u0394\u039F\u03A3", "\uD83D\uDE00"),
+    Gen.alphaStr.map(_.take(5)))
+
+  private val sketchText: Gen[String] = {
+    val body = Gen.listOf(textPiece).map(_.take(20).mkString)
+    Gen.frequency(
+      16 -> body,
+      2 -> body.map(b => s"  $b  "),
+      2 -> body.map(b => s"\t$b\t"),
+      1 -> Gen.const(""),
+      1 -> Gen.const("   "),
+      1 -> Gen.const(" \t\u000B\f\r\n "),
+      1 -> Gen.const(null))
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  private def longs(a: Any): Option[Seq[Long]] =
+    Option(a.asInstanceOf[ArrayData]).map(_.toLongArray().toSeq)
+
+  property("text_minhash_buckets and text_token_hashes == their spec forms, eval and codegen") =
+    sparkCheck(forAll(Gen.listOf(sketchText), Gen.choose(1, 8), Gen.choose(1, 4)) {
+      (texts, bands, perBand) =>
+        val session = spark
+        import session.implicits._
+        // the repartition keeps both projections out of ConvertToLocalRelation,
+        // which would evaluate them interpreted on the driver
+        val in = texts.zipWithIndex.toDF("text", "i").repartition(2)
+        def values(df: DataFrame) = df.collect().sortBy(_.getInt(0)).toSeq
+          .map(r => (Option(r.getSeq[Long](1)), Option(r.getSeq[Long](2))))
+        val t = array_distinct(TextFunctions.tokenize(lower(col("text"))))
+        val want = values(in.select($"i", HashExprs.minhashBuckets(t, bands, perBand),
+          sort_array(transform(filter(t, x => length(x) > 0), x => xxhash64(x)))))
+        val df = in.select($"i", HashExprs.textMinhashBuckets($"text", bands, perBand),
+          HashExprs.textTokenHashes($"text"))
+        val got = values(df)
+        val plan = df.queryExecution.executedPlan
+        // the stage must exist and compile: a codegen failure would silently
+        // fall back to interpreted evaluation
+        val codegen = Plans.collect(plan) {
+          case w: WholeStageCodegenExec if w.toString.contains("text_minhash_buckets(") &&
+            w.toString.contains("text_token_hashes(") => w
+        }
+        codegen.foreach(w => CodeGenerator.compile(w.doCodeGen()._2))
+        val evaluated = texts.map { s =>
+          val text = Literal.create(s, StringType)
+          (longs(TextMinHashBuckets(text, bands, perBand).eval()),
+            longs(TextTokenHashes(text).eval()))
+        }
+        val shown = texts.map(s => Option(s).map(_.flatMap(c =>
+          if (c < ' ' || c > '~') f"\\u${c.toInt}%04X" else c.toString)))
+        (codegen.nonEmpty :| s"kernels not in one codegen stage:\n$plan") &&
+          (got == want) :| s"texts $shown: codegen got $got want $want" &&
+          (evaluated == want) :| s"texts $shown: eval got $evaluated want $want"
     })
 }
