@@ -24,4 +24,13 @@ object ColumnShim {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** Submit a shuffle's map stage (`SparkContext.submitMapStage` is
+    * `private[spark]`): what a custom `ShuffleExchangeLike` runs when AQE
+    * materializes it.
+    */
+  def submitMapStage(sc: org.apache.spark.SparkContext,
+      dep: org.apache.spark.ShuffleDependency[_, _, _])
+      : scala.concurrent.Future[org.apache.spark.MapOutputStatistics] =
+    sc.submitMapStage(dep)
 }

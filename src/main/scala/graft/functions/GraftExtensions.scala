@@ -18,6 +18,12 @@ import org.apache.spark.sql.types.IntegerType
   * Both feed the same (name, builder) table, so `spark.sql("SELECT
   * fnv64(text) ...")` plans the identical codegen'd expression as the
   * Column API.
+  *
+  * The extension path also injects the plan rules (not `register`):
+  *  - `RangeJoinRule` and `PruneShuffledFanOut` (optimizer);
+  *  - [[graft.plans.RangeBoundsFromAggregate]] (AQE query-stage
+  *    preparation): `ORDER BY` over `GROUP BY ... count` takes its range
+  *    bounds from the aggregate's map stage instead of a sampling job.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -28,6 +34,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(graft.plans.RangeJoinRule.apply)
     // drop the fixture fan-out repartition when its consumer shuffles anyway
     ext.injectOptimizerRule(graft.plans.PruneShuffledFanOut.apply)
+    // ORDER BY over GROUP BY: range bounds from the aggregate's map side,
+    // no sampling job (AQE query-stage preparation)
+    ext.injectQueryStagePrepRule(graft.plans.RangeBoundsFromAggregate.apply)
   }
 }
 

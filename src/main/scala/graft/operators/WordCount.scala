@@ -24,9 +24,15 @@ import graft.functions.TextFunctions._
   * Spark mapping: `groupBy(word).count()` gives hash shuffle WITH map-side
   * partial aggregation (a strict upgrade over the reference's
   * one-message-per-token exchange), and `orderBy(cnt, word)` plants a
-  * `RangePartitioning` exchange whose boundaries come from reservoir
-  * sampling of the REAL count distribution — strictly better skew handling
-  * than the reference's log-scale heuristic (α=10, `MasterNode.java:157`).
+  * `RangePartitioning` exchange. Under AQE in a [[graft.core.GraftSession]],
+  * [[graft.plans.RangeBoundsFromAggregate]] takes that exchange's bounds
+  * from the aggregate's map stage: each map task keeps the bottom-k words
+  * by hash with their partial counts, the driver sums them into exact
+  * counts, and the bounds are quantiles of the REAL `(cnt, word)`
+  * distribution — with no sampling job and one run of the final
+  * aggregate, like the reference's closed-form planning, and better skew
+  * handling than its log-scale heuristic (α=10, `MasterNode.java:157`).
+  * Without AQE, Spark's sampling `RangePartitioner` plans the same order.
   * At 100 TB this is two shuffles of the *aggregated* keyspace, not the
   * token stream; AQE coalesces/splits partitions at runtime.
   */

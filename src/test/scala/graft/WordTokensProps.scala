@@ -91,7 +91,7 @@ object WordTokensProps extends Properties("WordTokens") {
   /** The reference map step in plain Scala: whitespace split, `\W` strip,
     * lower-case, drop empty; then counts in `(cnt, word)` order.
     */
-  private def transcription(lines: Seq[String]): Seq[String] =
+  def transcription(lines: Seq[String]): Seq[String] =
     lines.flatMap(_.split("[\t\n\u000B\f\r ]+"))
       .map(_.replaceAll("\\W", "").toLowerCase(Locale.ROOT))
       .filter(_.nonEmpty)
