@@ -141,45 +141,45 @@ object Dedup {
         concat_ws(" ", kept).as("text_dedup"))
   }
 
-  /** Distinct whitespace tokens per doc, with a document-frequency cap.
-    * The DF cap (`maxDf`) is prefix-filtering for the inverted-index join:
-    * ubiquitous tokens (Zipf head — the same skew the reference's log-scale
-    * partitioner fought, `MasterNode.java:154-164`) would create quadratic
-    * candidate pairs; dropping them bounds per-token fan-out. The cap IS
-    * the scale guarantee: per-token candidate pairs ≤ maxDf²/2, so the
-    * default is deliberately aggressive (10⁴ → ≤5·10⁷ pairs per ubiquitous
-    * token); raise it only when precision on common-token overlap matters
-    * more than the join bound.
-    */
   /** Default shingling: distinct lower-cased whitespace tokens. */
-  def wordTokens(textCol: Column): Column =
+  def lowerTokenSet(textCol: Column): Column =
     array_distinct(TextFunctions.tokenize(lower(textCol)))
 
+  /** Distinct whitespace tokens per doc as DF-capped postings (doc_id,
+    * tok, df) — see [[capDf]].
+    */
   def tokenPostings(docs: DataFrame, idCol: String, textCol: String, maxDf: Long,
-      shingles: Column => Column = wordTokens): DataFrame = {
-    val tok = docs
+      shingles: Column => Column = lowerTokenSet): DataFrame =
+    capDf(docs
       .select(col(idCol).as("doc_id"),
         explode(array_distinct(shingles(col(textCol)))).as("tok"))
-      .where(length(col("tok")) > 0)
-    val dfCounts = tok.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    tok.join(dfCounts.where(col("df") <= maxDf), "tok")
+      .where(length(col("tok")) > 0), maxDf)
+
+  /** (doc_id, tok) postings with their document frequency `df`, keeping
+    * only tokens with df ≤ maxDf. The DF cap is prefix-filtering for the
+    * inverted-index join: ubiquitous tokens (Zipf head — the same skew the
+    * reference's log-scale partitioner fought, `MasterNode.java:154-164`)
+    * would create quadratic candidate pairs; dropping them bounds
+    * per-token fan-out. The cap IS the scale guarantee: per-token
+    * candidate pairs ≤ maxDf²/2, so the default is deliberately aggressive
+    * (10⁴ → ≤5·10⁷ pairs per ubiquitous token); raise it only when
+    * precision on common-token overlap matters more than the join bound.
+    */
+  private def capDf(post: DataFrame, maxDf: Long): DataFrame = {
+    val dfCounts = post.groupBy(col("tok")).agg(count(lit(1)).as("df"))
+    post.join(dfCounts.where(col("df") <= maxDf), "tok")
   }
 
-  /** Exact token-set Jaccard near-dup pairs via inverted-index self-join:
-    * explode distinct tokens → join on token → per-pair intersection count
-    * → Jaccard from per-doc set sizes. Shuffles: tokenize (1), DF count
-    * (1), pair count (1) — all key-hash shuffles, linear in postings.
+  /** The inverted-index machinery of the set-overlap family: DF-capped
+    * (doc_id, tok) postings -> token self-join -> per-pair intersection
+    * counts, with both docs' set sizes joined back — (id_a, id_b,
+    * n_common, na, nb). ONE definition of the plan shape (three key-hash
+    * shuffles, all linear in postings, maxDf-capped fan-out);
+    * [[exhaustiveJaccardPairs]], [[containmentPairs]] and
+    * [[winnowingDupPairs]] differ only in their postings and the metric
+    * they derive from the counts.
     */
-  /** Shared inverted-index machinery for the set-overlap family: distinct
-    * shingle postings -> token self-join -> per-pair intersection counts,
-    * with both docs' set sizes joined back — (id_a, id_b, n_common, na,
-    * nb). ONE definition of the plan shape (three key-hash shuffles, all
-    * linear in postings, maxDf-capped fan-out); [[jaccardPairs]] and
-    * [[containmentPairs]] differ only in the metric they derive from it.
-    */
-  private def pairCounts(
-      docs: DataFrame, idCol: String, textCol: String, maxDf: Long,
-      shingles: Column => Column): DataFrame = {
+  private def pairCounts(postings: DataFrame): DataFrame = {
     // The self-join's work is QUADRATIC in each token's posting list while
     // its shuffle input is linear — exactly the case AQE's byte-size
     // coalescing mis-sizes: on a dup-heavy corpus the postings compress
@@ -189,9 +189,8 @@ object Dedup {
     // exempt from coalescing and pins the join's width to the cluster;
     // both join sides reuse the one exchange, so the plan still shuffles
     // the postings once.
-    val post = tokenPostings(docs, idCol, textCol, maxDf, shingles)
-      .select(col("doc_id"), col("tok"))
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("tok"))
+    val post = postings.select(col("doc_id"), col("tok"))
+      .repartition(postings.sparkSession.sparkContext.defaultParallelism, col("tok"))
     val sizes = post.groupBy(col("doc_id")).agg(count(lit(1)).as("n_tok"))
     post.as("a")
       .join(post.as("b"), col("a.tok") === col("b.tok") && col("a.doc_id") < col("b.doc_id"))
@@ -199,6 +198,44 @@ object Dedup {
       .agg(count(lit(1)).as("n_common"))
       .join(sizes.select(col("doc_id").as("id_a"), col("n_tok").as("na")), "id_a")
       .join(sizes.select(col("doc_id").as("id_b"), col("n_tok").as("nb")), "id_b")
+  }
+
+  /** The exact-Jaccard verify of every near-dup operator: adds `jaccard` =
+    * n_common / (na + nb − n_common) to pairs carrying those counts and
+    * keeps the rows at or above `threshold`. Two empty sets give 0/0,
+    * which is null, so no threshold keeps them.
+    */
+  private def jaccardAtLeast(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs
+      .withColumn("jaccard",
+        col("n_common").cast("double") /
+          (col("na") + col("nb") - col("n_common")).cast("double"))
+      .where(col("jaccard") >= threshold)
+
+  /** Exact token-set Jaccard near-dup pairs (id_a, id_b, n_common,
+    * jaccard), by a cost-model switch between two forms with identical
+    * output (DedupSpec pins it). The exhaustive join's per-token pair
+    * fan-out is bounded by the df cap (≤ maxDf² pairs per token), so under
+    * a TIGHT cap its three key-hash shuffles undercut the prefix
+    * machinery's fixed overhead (per-doc ordering pass, candidate
+    * distinct, verify joins: measured dd02 at maxDf=400, 0.8 vs 1.7 s at
+    * sf0.1). Past [[PrefixFilterDfCutoff]] the stopword blowup dominates
+    * and [[prefixJaccardPairs]] wins structurally (dd20 at maxDf=10⁴:
+    * 91 → 35 s). The same decision a cost-based planner makes from the
+    * broadcast threshold.
+    */
+  def jaccardPairs(
+      docs: DataFrame,
+      threshold: Double,
+      idCol: String = "doc_id",
+      textCol: String = "text",
+      maxDf: Long = 10000L,
+      shingles: Column => Column = lowerTokenSet): DataFrame = {
+    require(threshold >= 0.0 && threshold <= 1.0,
+      s"jaccard threshold must be in [0, 1], got $threshold")
+    if (maxDf > PrefixFilterDfCutoff)
+      prefixJaccardPairs(docs, threshold, idCol, textCol, maxDf, shingles)
+    else exhaustiveJaccardPairs(docs, threshold, idCol, textCol, maxDf, shingles)
   }
 
   /** Exact token-set Jaccard near-dup pairs, PREFIX-FILTERED (the
@@ -220,37 +257,21 @@ object Dedup {
     * [[exhaustiveJaccardPairs]] up to that astronomically-rare hash
     * collision; DedupSpec pins the equivalence on real corpora. Every
     * float ⌈t·n⌉ rounds DOWN by ε so fp noise can only lengthen a
-    * prefix (extra candidates), never drop a true pair. This is the 100 TB posture for exact near-dup truth:
-    * the exhaustive join's cost is set by the most common token
-    * (quadratic, cap-sensitive), the prefix join's by actual near-dup
-    * density.
+    * prefix (extra candidates), never drop a true pair. This is the
+    * 100 TB posture for exact near-dup truth: the exhaustive join's cost
+    * is set by the most common token (quadratic, cap-sensitive), the
+    * prefix join's by actual near-dup density.
     */
-  def jaccardPairs(
+  private[graft] def prefixJaccardPairs(
       docs: DataFrame,
       threshold: Double,
       idCol: String = "doc_id",
       textCol: String = "text",
       maxDf: Long = 10000L,
-      shingles: Column => Column = wordTokens,
-      prefixFilter: Option[Boolean] = None): DataFrame = {
+      shingles: Column => Column = lowerTokenSet): DataFrame = {
     // t = 0 degenerates correctly: α = 0, prefix = the whole set — the
     // join becomes the exhaustive one (a caller asking for "all
     // co-occurring pairs" gets exactly that)
-    require(threshold >= 0.0 && threshold <= 1.0,
-      s"jaccard threshold must be in [0, 1], got $threshold")
-    // Cost-model switch (both forms produce identical output — the spec
-    // pins it): the exhaustive join's per-token pair fan-out is bounded
-    // by the df cap (≤ maxDf² pairs per token), so under a TIGHT cap its
-    // three key-hash shuffles undercut the prefix machinery's fixed
-    // overhead (per-doc ordering pass, candidate distinct, verify joins:
-    // measured dd02 at maxDf=400, 0.8 vs 1.7 s at sf0.1). Past the
-    // cutoff the stopword blowup dominates and the prefix join wins
-    // structurally (dd20 at maxDf=10⁴: 91 → 35 s). The same decision a
-    // cost-based planner makes from the broadcast threshold — an
-    // explicit override is available for measurement (DedupSpec) and
-    // for corpora whose df distribution defies the cap heuristic.
-    if (!prefixFilter.getOrElse(maxDf > PrefixFilterDfCutoff))
-      return exhaustiveJaccardPairs(docs, threshold, idCol, textCol, maxDf, shingles)
     val post = tokenPostings(docs, idCol, textCol, maxDf, shingles)
     // canonical rarest-first order: (df, tok) — total, global, and the
     // same for every doc, which is all prefix completeness requires
@@ -313,17 +334,14 @@ object Dedup {
     val sets = byDoc.select(col("doc_id"),
       sort_array(transform(col("toks"), t => xxhash64(t))).as("hs"),
       col("n_tok"))
-    cand
+    val verified = cand
       .join(sets.select(col("doc_id").as("id_a"), col("hs").as("hs_a"),
         col("n_tok").as("na")), "id_a")
       .join(sets.select(col("doc_id").as("id_b"), col("hs").as("hs_b"),
         col("n_tok").as("nb")), "id_b")
       .withColumn("n_common",
         HashExprs.sortedIntersectSize(col("hs_a"), col("hs_b")).cast("long"))
-      .withColumn("jaccard",
-        col("n_common").cast("double") /
-          (col("na") + col("nb") - col("n_common")).cast("double"))
-      .where(col("jaccard") >= threshold)
+    jaccardAtLeast(verified, threshold)
       .select(col("id_a"), col("id_b"), col("n_common"), col("jaccard"))
   }
 
@@ -331,21 +349,18 @@ object Dedup {
     * inverted-index join to the prefix-filtered join. */
   val PrefixFilterDfCutoff = 2000L
 
-  /** The exhaustive inverted-index form [[jaccardPairs]] replaced —
-    * kept as the independent recompute DedupSpec pins the prefix join
-    * against (the same shape the DuckDB oracles use). */
+  /** The exhaustive inverted-index form of [[jaccardPairs]] — its choice
+    * under a tight df cap, and the independent recompute DedupSpec pins
+    * [[prefixJaccardPairs]] against (the same shape the DuckDB oracles
+    * use). */
   private[graft] def exhaustiveJaccardPairs(
       docs: DataFrame,
       threshold: Double,
       idCol: String = "doc_id",
       textCol: String = "text",
       maxDf: Long = 10000L,
-      shingles: Column => Column = wordTokens): DataFrame =
-    pairCounts(docs, idCol, textCol, maxDf, shingles)
-      .withColumn("jaccard",
-        col("n_common").cast("double") /
-          (col("na") + col("nb") - col("n_common")).cast("double"))
-      .where(col("jaccard") >= threshold)
+      shingles: Column => Column = lowerTokenSet): DataFrame =
+    jaccardAtLeast(pairCounts(tokenPostings(docs, idCol, textCol, maxDf, shingles)), threshold)
       .select(col("id_a"), col("id_b"), col("n_common"), col("jaccard"))
 
   /** Near-dup pairs by shingle CONTAINMENT — |A∩B| / min(|A|,|B|) — the
@@ -364,8 +379,8 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text",
       maxDf: Long = 10000L,
-      shingles: Column => Column = wordTokens): DataFrame =
-    pairCounts(docs, idCol, textCol, maxDf, shingles)
+      shingles: Column => Column = lowerTokenSet): DataFrame =
+    pairCounts(tokenPostings(docs, idCol, textCol, maxDf, shingles))
       .withColumn("containment",
         col("n_common").cast("double") / least(col("na"), col("nb")).cast("double"))
       .where(col("containment") >= threshold)
@@ -377,8 +392,7 @@ object Dedup {
     * No UDFs, no shuffle (per-row computation).
     */
   def minhashSignature(textCol: Column, k: Int): Column =
-    HashExprs.minhashSig(
-      array_distinct(TextFunctions.tokenize(lower(textCol))), k)
+    HashExprs.minhashSig(lowerTokenSet(textCol), k)
 
   /** One MinHash/LSH sketch per document: (doc_id, bk, toks) — `bk` the
     * per-band LSH bucket keys ([[graft.functions.TextMinHashBuckets]],
@@ -403,15 +417,58 @@ object Dedup {
       HashExprs.textMinhashBuckets(col(textCol), bands, rowsPerBand).as("bk"),
       HashExprs.textTokenHashes(col(textCol)).as("toks"))
 
-  /** (doc_id, band, bucket, bk) rows of a sketch, one per band. Outer
-    * explode: `bk` always has exactly `bands` elements, and the non-outer
-    * Generate re-evaluates the sketch inside its pushed-down size>0 /
+  /** Per-band rows for the LSH candidate self-join [[bandPairs]]: from a
+    * keyed table (doc_id, bk, …) — `bk` an array<bigint> with one key per
+    * band — one row per band carrying every other column of the input
+    * plus (band, bucket, pfx), where `bucket` = bk[band] and `pfx` =
+    * bk[0..band-1], the keys of the bands before this one.
+    *
+    * The explode is outer: a null or empty `bk` gives one row whose bucket
+    * is null, and a null bucket never equi-joins. For a fixed-length `bk`
+    * it gives the same rows as the inner explode, whose Generate
+    * re-evaluates the key expression inside its pushed-down size>0 /
     * notnull guards (3 sketch evaluations per row instead of 1).
     */
-  private def explodeBuckets(sketch: DataFrame): DataFrame =
-    sketch.select(col("doc_id"), posexplode_outer(col("bk")), col("bk"))
+  private[graft] def bandRows(keyed: DataFrame): DataFrame = {
+    val rest = keyed.columns.filter(_ != "bk").map(col).toSeq
+    keyed.select(rest :+ posexplode_outer(col("bk")) :+ col("bk"): _*)
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "bucket")
+      .select(rest ++ Seq(col("band"), col("bucket"),
+        slice(col("bk"), lit(1), col("band")).as("pfx")): _*)
+  }
+
+  /** The LSH candidate self-join of [[bandRows]] rows, aliased `x` and
+    * `y`: every pair with x.doc_id < y.doc_id that agrees in at least one
+    * band, emitted ONCE — at its first agreeing band. A row agrees at
+    * its own band by the equi-join; it is the first agreeing band exactly
+    * when no earlier band agrees, `first_eq_index(x.pfx, y.pfx) = -1`.
+    * Every column of both sides stays readable as `x.*` / `y.*`.
+    *
+    * Why this shape (each measured on one of its callers):
+    *  - the filter runs inside the join, before any further exchange. A
+    *    `distinct()` or a filter after the payload joins moves every
+    *    multi-band collision through them: on the dup-heavy sf0.1 fixture
+    *    the band join emits 92.3M colliding pairs for 10.2M distinct
+    *    candidates (dd03 +14% with the filter after the token-set joins;
+    *    dd20 767 MB of candidate shuffle instead of 92 MB, 19.8 → 28 s,
+    *    with the dedup at the audit exchange).
+    *  - a row carries `pfx`, not the whole key array: half the array
+    *    bytes on average through the join fan-out (the full-array form
+    *    spent 161 CPU-s in dd20's (64,2) join stage).
+    *  - `bucket` is the FIRST join key, because the sort-merge join's sort
+    *    prefix holds the first key only: `band` has just `bands` distinct
+    *    values, and (band, bucket) order sent nearly every comparison to a
+    *    full row compare (perfbench dedup task CPU ~2.2 s against ~1.5 s).
+    * Keys of different bands never meet, because the join matches `band`
+    * too.
+    */
+  private[graft] def bandPairs(rows: DataFrame): DataFrame =
+    rows.as("x")
+      .join(rows.as("y"),
+        col("x.bucket") === col("y.bucket") && col("x.band") === col("y.band") &&
+          col("x.doc_id") < col("y.doc_id"))
+      .where(HashExprs.firstEqIndex(col("x.pfx"), col("y.pfx")) === lit(-1))
 
   /** LSH banding: one bucket key per band, computed inside the same native
     * expression as the signature ([[graft.functions.MinHashBuckets]]).
@@ -420,41 +477,29 @@ object Dedup {
   def lshBuckets(
       docs: DataFrame, idCol: String, textCol: String,
       bands: Int, rowsPerBand: Int): DataFrame =
-    explodeBuckets(minhashSketch(docs, idCol, textCol, bands, rowsPerBand))
-      .drop("bk")
+    bandRows(minhashSketch(docs, idCol, textCol, bands, rowsPerBand)
+      .select(col("doc_id"), col("bk")))
+      .drop("pfx")
 
   /** MinHash+LSH candidate pairs, each pair once: (id_a, id_b, toks_a,
     * toks_b) with id_a < id_b, carrying both docs' sorted token-hash sets
-    * for exact verification.
-    *
-    * Candidates come from a self-join of per-band rows on (bucket, band).
-    * A row carries only the buckets of the bands BEFORE its own (`pfx` =
-    * bk[0..band-1], half the array on average; never the token set), and
-    * a pair colliding in several bands is kept only at its first colliding
-    * band: no earlier band agrees, `first_eq_index(pfx_x, pfx_y) == -1`.
-    * That filter runs inside the join, before any further exchange: on the
-    * dup-heavy sf0.1 fixture the band join emits 92.3M colliding pairs for
-    * 10.2M distinct candidates, so filtering after the token-set joins
-    * pushed 9× the rows through both of them (dd03 +14%, local[4]).
+    * for exact verification. Candidates are the [[bandPairs]] self-join of
+    * the sketch's [[bandRows]].
     *
     * The exchange is an explicit numbered repartition at the session
     * parallelism, read by both join sides: its rows are small, and the
     * pair expansion in a hot bucket is quadratic (work ≠ bytes, as in
     * [[pairCounts]]). The join strategy is left to AQE, which picks a
-    * sort-merge join at these sizes. `bucket` is the FIRST key because
-    * the sort prefix holds the first key only: `band` has just `bands`
-    * distinct values, and (band, bucket) order sent nearly every
-    * comparison to a full row compare (perfbench dedup task CPU ~2.2 s
-    * against ~1.5 s). A forced shuffled hash join held 16 MB per task
-    * instead of 52 MB on the 8,000-doc perfbench corpus, where 94% of
-    * (band, bucket) groups are singletons, but on the sf0.1 fixture
-    * (5,000 docs, 97% of rows in shared buckets, largest bucket 2,707
-    * docs) it made dd03 about a third slower than the sort-merge join.
+    * sort-merge join at these sizes. A forced shuffled hash join held
+    * 16 MB per task instead of 52 MB on the 8,000-doc perfbench corpus,
+    * where 94% of (band, bucket) groups are singletons, but on the sf0.1
+    * fixture (5,000 docs, 97% of rows in shared buckets, largest bucket
+    * 2,707 docs) it made dd03 about a third slower than the sort-merge
+    * join.
     *
     * The token sets join back on the two ids through one sketch subplan,
     * so the second side reuses the first side's exchange (or broadcast).
-    * Null texts sketch to a null `bk`, whose outer-explode row has a null
-    * bucket and never equi-joins. Doc ids are keys.
+    * Doc ids are keys.
     */
   def minhashCandidates(
       docs: DataFrame,
@@ -463,16 +508,10 @@ object Dedup {
       bands: Int = 32,
       rowsPerBand: Int = 4): DataFrame = {
     val sketch = minhashSketch(docs, idCol, textCol, bands, rowsPerBand)
-    val b = explodeBuckets(sketch)
-      .select(col("doc_id"), col("band"), col("bucket"),
-        slice(col("bk"), lit(1), col("band")).as("pfx"))
+    val b = bandRows(sketch.select(col("doc_id"), col("bk")))
       .repartition(docs.sparkSession.sparkContext.defaultParallelism,
         col("bucket"), col("band"))
-    b.as("x")
-      .join(b.as("y"),
-        col("x.bucket") === col("y.bucket") && col("x.band") === col("y.band") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .where(HashExprs.firstEqIndex(col("x.pfx"), col("y.pfx")) === lit(-1))
+    bandPairs(b)
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
       .join(sketch.select(col("doc_id").as("id_a"), col("toks").as("toks_a")), "id_a")
       .join(sketch.select(col("doc_id").as("id_b"), col("toks").as("toks_b")), "id_b")
@@ -494,11 +533,11 @@ object Dedup {
     *
     * Shuffles: sketches are map-side; candidates are one hash shuffle of
     * per-band (doc_id, band, bucket, pfx) rows at a pinned width
-    * ([[minhashCandidates]]); candidate dedup is a per-row filter inside
-    * that join (first colliding band), not a shuffle. The per-doc token
-    * sets join to each side of a pair — hash joins on doc id, linear; AQE
-    * broadcasts them while they fit and shuffles them once (one exchange,
-    * reused by both sides) when they do not — and `|A ∩ B|`
+    * ([[minhashCandidates]]); candidate dedup is [[bandPairs]]' per-row
+    * first-agreeing-band filter inside that join, not a shuffle. The
+    * per-doc token sets join to each side of a pair — hash joins on doc
+    * id, linear; AQE broadcasts them while they fit and shuffles them once
+    * (one exchange, reused by both sides) when they do not — and `|A ∩ B|`
     * is one codegen'd two-pointer merge per pair, so there is no postings
     * × postings intermediate and no final re-aggregation. Two blank
     * documents have empty token sets, so their 0/0 Jaccard is null and
@@ -511,14 +550,12 @@ object Dedup {
       textCol: String = "text",
       bands: Int = 32,
       rowsPerBand: Int = 4): DataFrame =
-    minhashCandidates(docs, idCol, textCol, bands, rowsPerBand)
-      .select(col("id_a"), col("id_b"),
-        HashExprs.sortedIntersectSize(col("toks_a"), col("toks_b")).as("n_common"),
-        size(col("toks_a")).as("na"), size(col("toks_b")).as("nb"))
-      .withColumn("jaccard",
-        col("n_common").cast("double") /
-          (col("na") + col("nb") - col("n_common")).cast("double"))
-      .where(col("jaccard") >= threshold)
+    jaccardAtLeast(
+      minhashCandidates(docs, idCol, textCol, bands, rowsPerBand)
+        .select(col("id_a"), col("id_b"),
+          HashExprs.sortedIntersectSize(col("toks_a"), col("toks_b")).as("n_common"),
+          size(col("toks_a")).as("na"), size(col("toks_b")).as("nb")),
+      threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
 
   /** LSH banding OPERATING CURVE — the dedup-side twin of
@@ -536,10 +573,9 @@ object Dedup {
     * lineage-cut; each config derives its per-band bucket keys by folding
     * contiguous signature slices, so sweeping configs re-reads ≤
     * docs × nHashes longs, never the corpus. Candidate generation per
-    * config is the (band, bucket) self-join of [[minhashCandidates]]
-    * with the same first-colliding-band `pfx` filter (no distinct() over
-    * the candidate stream); unlike there, its exchange width is left to
-    * AQE and the audit join's width is pinned instead.
+    * config is the [[bandPairs]] self-join, as in [[minhashCandidates]];
+    * unlike there, its exchange width is left to AQE and the audit join's
+    * width is pinned instead.
     *
     * Unlike [[minhashDupPairs]] (xxhash64, engine-private, gated on its
     * exact-verified OUTPUT), this signature is built from the
@@ -566,7 +602,7 @@ object Dedup {
     require(configs.forall { case (b, r) => b * r == nHashes },
       s"every (bands, rows) config must multiply to the shared signature length $nHashes")
     import graft.functions.{HashExprs, HashImpl}
-    val tk = filter(wordTokens(col(textCol)), t => length(t) > 0)
+    val tk = filter(lowerTokenSet(col(textCol)), t => length(t) > 0)
     val hashed = docs
       .select(col(idCol).as("doc_id"), tk.as("tk"))
       .where(size(col("tk")) > 0)
@@ -596,33 +632,7 @@ object Dedup {
           slice(col("sig"), j * lit(rowsPerBand) + lit(1), lit(rowsPerBand)),
           lit(HashImpl.FnvBasis),
           (acc, v) => acc.bitwiseXOR(v) * lit(HashImpl.FnvPrime)))
-      // Per-row dedup BEFORE any exchange — kept from r12, and
-      // re-validated this round against the "narrow rows + dedup at the
-      // audit exchange" alternative: multi-band duplicate pairs live in
-      // DIFFERENT (band, bucket) partitions, so a dropDuplicates above
-      // the join cannot partially collapse them map-side and every
-      // duplicate crosses the audit exchange whole — measured 767 MB of
-      // candidate shuffle (vs 92 MB deduped) and dd20 19.8 → 28 s.
-      // r13 refinement: the collision row carries only the bands BEFORE
-      // its own (`pfx` = bk[0..band-1]), because "first agreeing band
-      // == this band" ⟺ "no EARLIER band agrees" — the same dedup from
-      // firstEqIndex(pfx_x, pfx_y) == -1 with half the array bytes
-      // copied through the join fan-out on average (the join output is
-      // tens of millions of rows at the (64,2) config; the full-bk form
-      // moved 2×bands longs per row, measured 161 CPU-s in that one
-      // stage).
-      val b = sig.select(col("doc_id"), bk.as("bk"))
-        .select(col("doc_id"), posexplode(col("bk")), col("bk"))
-        .withColumnRenamed("pos", "band")
-        .withColumnRenamed("col", "bucket")
-        .select(col("doc_id"), col("band"), col("bucket"),
-          slice(col("bk"), lit(1), col("band")).as("pfx"))
-      val cand = b.as("x")
-        .join(b.as("y"),
-          col("x.band") === col("y.band") &&
-            col("x.bucket") === col("y.bucket") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .where(HashExprs.firstEqIndex(col("x.pfx"), col("y.pfx")) === lit(-1))
+      val cand = bandPairs(bandRows(sig.select(col("doc_id"), bk.as("bk"))))
         .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
       // Measured NON-fix (r12 optimization round, kept as a record): a
       // broadcast(truth) hint here — "broadcast the small audit side
@@ -777,23 +787,6 @@ object Dedup {
       buckets, s"${table}_buckets", s"$path/buckets", nBuckets, "bucket")
   }
 
-  /** Incremental near-dedup of a NEW batch against a persisted corpus
-    * index: sketch ONLY the batch (the index side is consumed as stored —
-    * PlanSpec asserts the single sketch expression in the plan), equi-join
-    * the narrow bucket entries on the LSH bucket key, per-row candidate
-    * dedup via `first_eq_index` (a batch/corpus pair colliding in several
-    * bands survives only where the first agreeing band equals the joined
-    * row's band — no distinct), THEN fetch the verification payloads —
-    * batch token sets by batch_id, corpus token sets from the stored
-    * `_docs` table by doc_id — and verify with exact token-set Jaccard.
-    * Emits (batch_id, corpus_id, jaccard) for pairs ≥ threshold.
-    *
-    * Scale shape: the corpus is never re-tokenized and never shuffles
-    * (both index tables are bucketed on their join keys; with a small
-    * batch AQE broadcasts the batch side and the bucket entries stream
-    * map-side). Only ids and bucket arrays cross the candidate join; token
-    * sets move once per deduplicated candidate.
-    */
   /** The batch side's sketch projection, shared by both index-lookup
     * forms: (batch_id, LSH bucket array, verification token set).
     */
@@ -803,6 +796,25 @@ object Dedup {
     minhashSketch(batch, idCol, textCol, bands, rowsPerBand)
       .select(col("doc_id").as("batch_id"), col("bk").as("qbk"), col("toks").as("qtoks"))
 
+  /** The banded candidate join shared by both index-lookup forms:
+    * (batch_id, qtoks, corpus_id), each batch/corpus pair once. The
+    * batch's exploded bucket entries equi-join the stored entries on the
+    * bucket key, and a pair colliding in several bands survives only
+    * where the first agreeing band equals the joined row's band — no
+    * distinct. The stored entries keep the whole `bk` (the persisted
+    * index format), so the rule reads the full arrays here rather than
+    * the [[bandPairs]] prefix. A caller that selects (batch_id,
+    * corpus_id) keeps `qtoks` out of the join by column pruning.
+    */
+  private def indexCandidates(sketched: DataFrame, indexBuckets: DataFrame): DataFrame =
+    sketched
+      .select(col("batch_id"), col("qbk"), col("qtoks"), posexplode_outer(col("qbk")))
+      .withColumnRenamed("pos", "qband")
+      .withColumnRenamed("col", "qbucket")
+      .join(indexBuckets, col("qbucket") === col("bucket"))
+      .where(HashExprs.firstEqIndex(col("qbk"), col("bk")) === col("qband"))
+      .select(col("batch_id"), col("qtoks"), col("doc_id").as("corpus_id"))
+
   /** The exact-Jaccard verify tail, shared by both index-lookup forms:
     * candidates arrive as (batch_id, qtoks, corpus_id), corpus token
     * sets come from the stored `_docs` table, and pairs ≥ threshold
@@ -810,18 +822,30 @@ object Dedup {
     */
   private def verifyExactJaccard(
       cands: DataFrame, indexDocs: DataFrame, threshold: Double): DataFrame =
-    cands
-      .join(indexDocs.select(col("doc_id").as("corpus_id"),
-        col("n_tok").as("nb"), col("toks")), "corpus_id")
-      .select(col("batch_id"), col("corpus_id"),
-        HashExprs.sortedIntersectSize(col("qtoks"), col("toks")).as("n_common"),
-        size(col("qtoks")).as("na"), col("nb"))
-      .withColumn("jaccard",
-        col("n_common").cast("double") /
-          (col("na") + col("nb") - col("n_common")).cast("double"))
-      .where(col("jaccard") >= threshold)
+    jaccardAtLeast(
+      cands
+        .join(indexDocs.select(col("doc_id").as("corpus_id"),
+          col("n_tok").as("nb"), col("toks")), "corpus_id")
+        .select(col("batch_id"), col("corpus_id"),
+          HashExprs.sortedIntersectSize(col("qtoks"), col("toks")).as("n_common"),
+          size(col("qtoks")).as("na"), col("nb")),
+      threshold)
       .select(col("batch_id"), col("corpus_id"), col("jaccard"))
 
+  /** Incremental near-dedup of a NEW batch against a persisted corpus
+    * index: sketch ONLY the batch (the index side is consumed as stored —
+    * PlanSpec asserts the single sketch expression in the plan), find
+    * candidates with [[indexCandidates]], THEN fetch the verification
+    * payloads — batch token sets by batch_id, corpus token sets from the
+    * stored `_docs` table by doc_id — and verify with exact token-set
+    * Jaccard. Emits (batch_id, corpus_id, jaccard) for pairs ≥ threshold.
+    *
+    * Scale shape: the corpus is never re-tokenized and never shuffles
+    * (both index tables are bucketed on their join keys; with a small
+    * batch AQE broadcasts the batch side and the bucket entries stream
+    * map-side). Only ids and bucket arrays cross the candidate join; token
+    * sets move once per deduplicated candidate.
+    */
   def dedupAgainstIndex(
       batch: DataFrame,
       indexBuckets: DataFrame,
@@ -832,15 +856,10 @@ object Dedup {
       bands: Int = 16,
       rowsPerBand: Int = 4): DataFrame = {
     val sketched = sketchBatch(batch, idCol, textCol, bands, rowsPerBand)
-    val b = sketched
-      .select(col("batch_id"), col("qbk"), posexplode_outer(col("qbk")))
-      .withColumnRenamed("pos", "qband")
-      .withColumnRenamed("col", "qbucket")
-    val candidates = b.join(indexBuckets, col("qbucket") === col("bucket"))
-      .where(HashExprs.firstEqIndex(col("qbk"), col("bk")) === col("qband"))
-      .select(col("batch_id"), col("doc_id").as("corpus_id"))
     verifyExactJaccard(
-      candidates.join(sketched.select(col("batch_id"), col("qtoks")), "batch_id"),
+      indexCandidates(sketched, indexBuckets)
+        .select(col("batch_id"), col("corpus_id"))
+        .join(sketched.select(col("batch_id"), col("qtoks")), "batch_id"),
       indexDocs, threshold)
   }
 
@@ -863,17 +882,10 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text",
       bands: Int = 16,
-      rowsPerBand: Int = 4): DataFrame = {
-    val b = sketchBatch(batch, idCol, textCol, bands, rowsPerBand)
-      .select(col("batch_id"), col("qbk"), col("qtoks"),
-        posexplode_outer(col("qbk")))
-      .withColumnRenamed("pos", "qband")
-      .withColumnRenamed("col", "qbucket")
-    val candidates = b.join(indexBuckets, col("qbucket") === col("bucket"))
-      .where(HashExprs.firstEqIndex(col("qbk"), col("bk")) === col("qband"))
-      .select(col("batch_id"), col("qtoks"), col("doc_id").as("corpus_id"))
-    verifyExactJaccard(candidates, indexDocs, threshold)
-  }
+      rowsPerBand: Int = 4): DataFrame =
+    verifyExactJaccard(
+      indexCandidates(sketchBatch(batch, idCol, textCol, bands, rowsPerBand), indexBuckets),
+      indexDocs, threshold)
 
   /** 64-bit SimHash from per-token FNV-1a (code points): bit b of the
     * fingerprint is the sign of Σ_tokens (±1 by token-hash bit b). One
@@ -883,21 +895,18 @@ object Dedup {
     * rows-only).
     */
   def simhash64(textCol: Column): Column =
-    HashExprs.simhash64(array_distinct(TextFunctions.tokenize(lower(textCol))))
+    HashExprs.simhash64(lowerTokenSet(textCol))
 
   /** SimHash near-dup pairs with Hamming distance ≤ maxHamming (≤ 3 by
     * default): pigeonhole blocking on 4×16-bit chunks (any pair within
     * distance 3 shares at least one exact chunk) → equi-join per chunk →
     * exact `bit_count(xor)` verify.
     *
-    * A pair can collide in up to 4 chunks; it is kept only in the row
-    * whose chunk index equals the FIRST index where the two 4-chunk key
-    * arrays agree (`first_eq_index` — the same per-row candidate dedup as
-    * [[minhashDupPairs]] and [[Similarity.lshCandidatePairs]]), so
-    * multi-chunk duplicates die in a codegen'd filter instead of a
-    * `distinct()` shuffle of the whole candidate stream. One shuffle per
-    * chunk key; no cartesian; no exchange between the chunk join and the
-    * hamming filter (PlanSpec asserts the aggregate-free plan).
+    * A pair can collide in up to 4 chunks; the chunk join is the
+    * [[bandPairs]] self-join, which keeps it once, at its first agreeing
+    * chunk, with no `distinct()` shuffle of the candidate stream. No
+    * cartesian; no exchange between the chunk join and the hamming filter
+    * (PlanSpec asserts the aggregate-free plan).
     */
   def simhashDupPairs(
       docs: DataFrame,
@@ -910,29 +919,22 @@ object Dedup {
 
   /** The fingerprint-agnostic core of [[simhashDupPairs]]: near-dup pairs
     * of any 64-bit content fingerprint table `fps` = (doc_id, sh) with
-    * Hamming distance ≤ maxHamming — same 4×16-bit pigeonhole blocking
-    * (exact for maxHamming ≤ 3: a pair within distance 3 must agree on
-    * one whole chunk), same `first_eq_index` per-row multi-chunk dedup,
-    * same plan shape (one shuffle per chunk key, no cartesian, no
-    * aggregate between join and verify). Callers: SimHash over text
+    * Hamming distance ≤ maxHamming. The four 16-bit chunks of `sh` are
+    * the band keys of a [[bandRows]] table (pigeonhole blocking, exact for
+    * maxHamming ≤ 3: a pair within distance 3 must agree on one whole
+    * chunk), candidates come from the [[bandPairs]] self-join, and the
+    * verify is `bit_count(xor)` over the `sh` each side carries — no
+    * cartesian, no aggregate between join and verify. Callers: SimHash over text
     * (dd04) and perceptual aHash over decoded images (mm10) — the same
     * dedup machinery serving two modalities is the point.
     */
-  def fingerprintDupPairs(fps: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val chunked = fps.select(col("doc_id"), col("sh"),
-      array((0 until 4).map(c =>
-        shiftright(col("sh"), c * 16).bitwiseAND(lit(0xFFFFL))): _*).as("ck"))
-      .select(col("doc_id"), col("sh"), col("ck"), posexplode(col("ck")))
-      .withColumnRenamed("pos", "chunk").withColumnRenamed("col", "ckey")
-    chunked.as("x")
-      .join(chunked.as("y"),
-        col("x.chunk") === col("y.chunk") && col("x.ckey") === col("y.ckey") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .where(HashExprs.firstEqIndex(col("x.ck"), col("y.ck")) === col("x.chunk"))
+  def fingerprintDupPairs(fps: DataFrame, maxHamming: Int = 3): DataFrame =
+    bandPairs(bandRows(fps.select(col("doc_id"), col("sh"),
+        array((0 until 4).map(c =>
+          shiftright(col("sh"), c * 16).bitwiseAND(lit(0xFFFFL))): _*).as("bk"))))
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"),
         bit_count(col("x.sh").bitwiseXOR(col("y.sh"))).as("hamming"))
       .where(col("hamming") <= maxHamming)
-  }
 
   /** SRP plane count sized for candidate-volume LINEARITY: with 2^nPlanes
     * buckets per table and near-uniform directions, the expected random
@@ -1401,12 +1403,11 @@ object Dedup {
       HashExprs.winnowFps(toks, k, w).as("fps"))
   }
 
-  /** Near-dup pairs by winnowing-fingerprint Jaccard: the same DF-capped
-    * inverted-index join as [[jaccardPairs]], but over the winnowed
-    * fingerprint sets — the index holds ~2/(w+1) of the grams, so at
-    * 100 TB the exchange is a fraction of the full-shingle index for the
-    * same ≥(k+w−1)-run recall. The DF cap bounds per-key fan-out exactly
-    * as in [[tokenPostings]] (candidate pairs ≤ maxDf²/2 per fingerprint).
+  /** Near-dup pairs by winnowing-fingerprint Jaccard: the DF-capped
+    * inverted-index join of [[exhaustiveJaccardPairs]] ([[capDf]],
+    * [[pairCounts]]), but over the winnowed fingerprint sets — the index
+    * holds ~2/(w+1) of the grams, so at 100 TB the exchange is a fraction
+    * of the full-shingle index for the same ≥(k+w−1)-run recall.
     */
   def winnowingDupPairs(
       docs: DataFrame,
@@ -1417,23 +1418,8 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     val post = winnowFingerprints(docs, k, w, idCol, textCol)
-      .select(col("doc_id"), explode(col("fps")).as("fp"))
-    val dfCounts = post.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-    val capped = post.join(dfCounts.where(col("df") <= maxDf), "fp")
-      .select(col("doc_id"), col("fp"))
-    val sizes = capped.groupBy(col("doc_id")).agg(count(lit(1)).as("n_fp"))
-    val pairs = capped.as("a")
-      .join(capped.as("b"),
-        col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("n_common"))
-    pairs
-      .join(sizes.select(col("doc_id").as("id_a"), col("n_fp").as("na")), "id_a")
-      .join(sizes.select(col("doc_id").as("id_b"), col("n_fp").as("nb")), "id_b")
-      .withColumn("jaccard",
-        col("n_common").cast("double") /
-          (col("na") + col("nb") - col("n_common")).cast("double"))
-      .where(col("jaccard") >= threshold)
+      .select(col("doc_id"), explode(col("fps")).as("tok"))
+    jaccardAtLeast(pairCounts(capDf(post, maxDf)), threshold)
       .select(col("id_a"), col("id_b"), col("n_common"), col("jaccard"))
   }
 

@@ -235,31 +235,19 @@ object Similarity {
       srpBucket(vec, nPlanes, planeOffset = t * nPlanes)): _*)
 
   /** LSH candidate pairs: `nTables` independent sign-projection tables;
-    * pairs sharing any (table, bucket). One hash shuffle on the bucket key,
-    * carrying only (vid, bucket-array) — never the vectors. A pair that
-    * collides in several tables is kept only where the FIRST colliding
-    * table equals the current one (`first_eq_index`, same per-row dedup as
-    * [[Dedup.minhashDupPairs]]) — no `distinct()` shuffle of the candidate
-    * stream.
+    * pairs sharing any (table, bucket), each once — the tables are the
+    * bands of the [[Dedup.bandPairs]] self-join. One hash shuffle on the
+    * bucket key, carrying only (id, bucket keys) — never the vectors.
     */
   def lshCandidatePairs(
       emb: DataFrame,
       nPlanes: Int = 12,
       nTables: Int = 4,
       idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val buckets = emb
-      .select(col(idCol).as("vid"),
-        srpBucketArray(col(vecCol).cast("array<double>"), nPlanes, nTables).as("bk"))
-      .select(col("vid"), col("bk"), posexplode(col("bk")))
-      .withColumnRenamed("pos", "table").withColumnRenamed("col", "bucket")
-    buckets.as("a")
-      .join(buckets.as("b"),
-        col("a.table") === col("b.table") && col("a.bucket") === col("b.bucket") &&
-          col("a.vid") < col("b.vid"))
-      .where(graft.functions.HashExprs.firstEqIndex(col("a.bk"), col("b.bk")) === col("a.table"))
-      .select(col("a.vid").as("id_a"), col("b.vid").as("id_b"))
-  }
+      vecCol: String = "embedding"): DataFrame =
+    Dedup.bandPairs(Dedup.bandRows(emb.select(col(idCol).as("doc_id"),
+        srpBucketArray(col(vecCol).cast("array<double>"), nPlanes, nTables).as("bk"))))
+      .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
 
   /** Deterministic seed centroids: the embeddings of the first `nCells`
     * corpus ids, numbered 1..nCells.

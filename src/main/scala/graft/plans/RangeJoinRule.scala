@@ -29,8 +29,7 @@ import org.apache.spark.sql.types.{ArrayType, LongType, TimestampType}
   * timestamp from one side and lo/hi expressions over the other, and NO
   * attr=attr equi conjunct (with one, the join already hash-partitions).
   * Idempotent: the rewritten join has an equi conjunct, so it never
-  * refires. Bin width: `spark.graft.rangejoin.binwidth.micros` when set;
-  * otherwise AUTO-DERIVED at plan time as the median interval span
+  * refires. Bin width: AUTO-DERIVED at plan time as the median interval span
   * (`approx_percentile(hi − lo, 0.5)` over a DETERMINISTIC sample of the
   * interval side: rows kept by `xxhash64(lo, hi) % 8 == 0` — membership is
   * a function of row content, not partition order — positive spans only,
@@ -51,7 +50,8 @@ import org.apache.spark.sql.types.{ArrayType, LongType, TimestampType}
   */
 case class RangeJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  private val widthKey = "spark.graft.rangejoin.binwidth.micros"
+  /** Bin width when the span sample finds no rows or fails: 10 minutes. */
+  private val FallbackWidthMicros = 600000000L
 
   /** Derived widths per canonicalized interval subplan — bounded by the
     * number of distinct range joins a session plans; never invalidated
@@ -69,9 +69,8 @@ case class RangeJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
         else findRangePattern(conjuncts, left, right) match {
           case Some((ts, lo, hi, hiInclusive, pointsLeft)) =>
             val intervalsSide = if (pointsLeft) j.right else j.left
-            val width = spark.conf.getOption(widthKey).map(_.toLong)
-              .orElse(medianSpanMicros(intervalsSide, lo, hi))
-              .getOrElse(600000000L)
+            val width = medianSpanMicros(intervalsSide, lo, hi)
+              .getOrElse(FallbackWidthMicros)
             rewrite(j, ts, lo, hi, hiInclusive, pointsLeft, width, hint)
           case None => j
         }
@@ -86,8 +85,8 @@ case class RangeJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * the unfiltered rows, same cap. The sampling query is an aggregate
     * over one relation — no join — so this rule no-ops on it (no
     * recursion). Memoized per canonicalized subplan. None on empty input
-    * or any execution failure (logged; caller falls back to the conf
-    * default).
+    * or any execution failure (logged; caller falls back to
+    * [[FallbackWidthMicros]]).
     */
   private def medianSpanMicros(
       intervals: LogicalPlan, lo: Expression, hi: Expression): Option[Long] = {

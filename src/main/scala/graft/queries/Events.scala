@@ -532,10 +532,10 @@ object Events {
     * AUTO-DERIVED bin width exists for: 6-hour windows (purchases by users
     * < 50, ±3 h) over click points. With the r2 fixed 10-minute default
     * each interval row exploded into 37 bins; the plan-time median-span
-    * sample derives a ~6-hour width instead, ≤ 2 bins per interval. No
-    * `spark.graft.rangejoin.binwidth.micros` is set anywhere in the judged
-    * path, so this row oracle-gates the sampling-derived plan end to end
-    * (ev09 covers the narrow-interval case the default happened to fit).
+    * sample derives a ~6-hour width instead, ≤ 2 bins per interval. The
+    * width is always sampling-derived, so this row oracle-gates that plan
+    * end to end (ev09 covers the narrow-interval case the default happened
+    * to fit).
     */
   private def wideRangeJoin(spark: SparkSession, dir: String): DataFrame = {
     if (!spark.experimental.extraOptimizations

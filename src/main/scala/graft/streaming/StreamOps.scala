@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import graft.core.QueryDef.{dec, dsum}
-import graft.functions.TextFunctions.wordTokens
+import graft.operators.WordCount
 
 /** Structured Streaming surface — the reference is batch-only (SURVEY
   * §2.9 "absent"), so these are the reference's pipeline shapes lifted to
@@ -34,12 +34,8 @@ object StreamOps {
       .select(col("w.start").as("w_start"), col("event_type"), col("n"))
 
   /** Streaming word count — the reference query over a text stream. */
-  def streamingWordCount(lines: DataFrame, textCol: String = "value"): DataFrame = {
-    lines
-      .select(explode(wordTokens(col(textCol))).as("word"))
-      .groupBy(col("word"))
-      .agg(count(lit(1)).as("cnt"))
-  }
+  def streamingWordCount(lines: DataFrame, textCol: String = "value"): DataFrame =
+    WordCount.counts(lines, textCol)
 
   /** Streaming exact dedup: first occurrence per key wins, duplicate
     * arrivals within the watermark horizon are dropped. State is the seen

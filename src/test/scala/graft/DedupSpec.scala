@@ -162,6 +162,36 @@ class DedupSpec extends SparkSpec {
     assertSamePairs(got, bruteForcePairs(corpus, 0.8))
   }
 
+  test("banded self-join emits exactly the pairs sharing a (band, key), each once") {
+    // bandRows/bandPairs over plain key arrays, against the brute-force
+    // set of (a < b) pairs that agree at some band position
+    val rnd = new scala.util.Random(23)
+    def check(name: String, rows: Seq[(Long, Option[Seq[Long]])]): Unit = {
+      val want = (for {
+        (a, Some(ka)) <- rows; (b, Some(kb)) <- rows
+        if a < b && ka.zip(kb).exists { case (x, y) => x == y }
+      } yield (a, b)).toSet
+      val got = Dedup.bandPairs(Dedup.bandRows(rows.toDF("doc_id", "bk")))
+        .select($"x.doc_id", $"y.doc_id").as[(Long, Long)].collect().toSeq
+      val repeats = got.length - got.toSet.size
+      assert(repeats == 0, s"$name: $repeats pairs were emitted more than once")
+      assert(got.toSet == want, s"$name: got ${got.toSet -- want}, missed ${want -- got.toSet}")
+    }
+    // 4 bands over 5 key values: most pairs collide in 0-4 bands; ids
+    // arrive shuffled, so both orders of a pair occur; null and empty
+    // key arrays sit beside them, and three rows agree in every band
+    check("random", rnd.shuffle(
+      (1L to 80L).map(i => i -> Option(Seq.fill(4)(rnd.nextInt(5).toLong))) ++
+        Seq(81L -> None, 82L -> None, 83L -> Some(Seq.empty[Long]),
+          84L -> Some(Seq.empty[Long])) ++
+        Seq(90L, 91L, 92L).map(_ -> Option(Seq(1L, 2L, 3L, 4L)))))
+    check("one band", rnd.shuffle(
+      (1L to 40L).map(i => i -> Option(Seq(rnd.nextInt(4).toLong)))))
+    // a 200-row hot bucket in band 0, distinct keys in the other bands
+    check("hot bucket",
+      (200L to 1L by -1L).map(i => i -> Option(Seq(7L, 1000L + i, 2000L + i))))
+  }
+
   /** Near-duplicates that only the tokenizer's edge cases make equal: case,
     * tab and vertical-tab separators, İ (U+0130), a Greek final sigma and
     * the KELVIN SIGN (U+212A, which lower-cases to ASCII `k`): 40 draws of
@@ -670,11 +700,10 @@ class DedupSpec extends SparkSpec {
       (13L, "zzz"), (14L, "zzz"),                    // identical singletons
       (15L, "the the the unique1"), (16L, "the unique2")
     ).toDF("doc_id", "text"))
-    // force the prefix strategy at BOTH caps (the auto cost switch would
-    // route the tight cap to the exhaustive join — equality by identity)
+    // the prefix form at BOTH caps (the auto cost switch would route the
+    // tight cap to the exhaustive join — equality by identity)
     for (t <- Seq(0.5, 0.8, 1.0); cap <- Seq(400L, 10000L)) {
-      val fast = Dedup.jaccardPairs(tricky, t, maxDf = cap,
-        prefixFilter = Some(true))
+      val fast = Dedup.prefixJaccardPairs(tricky, t, maxDf = cap)
       val slow = Dedup.exhaustiveJaccardPairs(tricky, t, maxDf = cap)
       assert(fast.exceptAll(slow).isEmpty && slow.exceptAll(fast).isEmpty,
         s"prefix join must be lossless and exact at t=$t maxDf=$cap")
@@ -682,7 +711,7 @@ class DedupSpec extends SparkSpec {
     // sf0.001 corpus: the real fixture, both thresholds the queries use
     val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     for (t <- Seq(0.5, 0.8)) {
-      val fast = Dedup.jaccardPairs(real, t, prefixFilter = Some(true))
+      val fast = Dedup.prefixJaccardPairs(real, t)
       val slow = Dedup.exhaustiveJaccardPairs(real, t)
       assert(fast.exceptAll(slow).isEmpty && slow.exceptAll(fast).isEmpty,
         s"prefix join must match exhaustive on the fixture at t=$t")
