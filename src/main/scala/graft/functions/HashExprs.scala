@@ -162,6 +162,16 @@ object HashImpl {
     c
   }
 
+  /** Exact Jaccard |A ∩ B| / |A ∪ B| of two SORTED distinct long sets, as
+    * the double division `n / (|A| + |B| − n)` of int counts; NaN where
+    * both sets are empty (0/0), which [[SortedJaccard]] returns as null.
+    */
+  def sortedJaccard(a: ArrayData, b: ArrayData): Double = {
+    val n = sortedIntersectCount(a, b)
+    val union = a.numElements() + b.numElements() - n
+    if (union == 0) Double.NaN else n.toDouble / union.toDouble
+  }
+
   final val FnvBasis = 0xcbf29ce484222325L // -3750763034362895579 signed
   final val FnvPrime = 0x100000001b3L
 
@@ -357,6 +367,37 @@ case class SortedIntersectSize(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** `sorted_jaccard(a, b)` → exact Jaccard of two sorted distinct
+  * array<bigint> sets ([[HashImpl.sortedJaccard]]), null where both are
+  * empty. One merge yields the verify's value, so a `jaccard >= t` filter
+  * pushed into a join condition evaluates it once per candidate.
+  */
+case class SortedJaccard(left: Expression, right: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+  override def dataType: DataType = DoubleType
+  // null for two empty sets even where both inputs are non-nullable
+  override def nullable: Boolean = true
+  override def prettyName: String = "sorted_jaccard"
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires two array<bigint> inputs, got $other")
+    }
+  override protected def nullSafeEval(a: Any, b: Any): Any = {
+    val j = HashImpl.sortedJaccard(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (j.isNaN) null else j
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""${ev.value} = graft.functions.HashImpl.sortedJaccard($a, $b);
+         |${ev.isNull} = Double.isNaN(${ev.value});""".stripMargin)
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SortedJaccard =
+    copy(left = newLeft, right = newRight)
+}
+
 /** Input contract shared by the sketch expressions: one array<string>. */
 trait TokenArrayExpression extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
@@ -540,4 +581,6 @@ object HashExprs {
     ColumnShim.column(FirstEqIndex(ColumnShim.expression(a), ColumnShim.expression(b)))
   def sortedIntersectSize(a: Column, b: Column): Column =
     ColumnShim.column(SortedIntersectSize(ColumnShim.expression(a), ColumnShim.expression(b)))
+  def sortedJaccard(a: Column, b: Column): Column =
+    ColumnShim.column(SortedJaccard(ColumnShim.expression(a), ColumnShim.expression(b)))
 }

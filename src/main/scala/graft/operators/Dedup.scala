@@ -417,14 +417,14 @@ object Dedup {
       HashExprs.textMinhashBuckets(col(textCol), bands, rowsPerBand).as("bk"),
       HashExprs.textTokenHashes(col(textCol)).as("toks"))
 
-  /** Per-band rows for the LSH candidate self-join [[bandPairs]]: from a
+  /** Per-band rows for the LSH candidate pairing [[bandPairs]]: from a
     * keyed table (doc_id, bk, …) — `bk` an array<bigint> with one key per
     * band — one row per band carrying every other column of the input
     * plus (band, bucket, pfx), where `bucket` = bk[band] and `pfx` =
     * bk[0..band-1], the keys of the bands before this one.
     *
     * The explode is outer: a null or empty `bk` gives one row whose bucket
-    * is null, and a null bucket never equi-joins. For a fixed-length `bk`
+    * is null, and a null bucket never pairs. For a fixed-length `bk`
     * it gives the same rows as the inner explode, whose Generate
     * re-evaluates the key expression inside its pushed-down size>0 /
     * notnull guards (3 sketch evaluations per row instead of 1).
@@ -438,37 +438,45 @@ object Dedup {
         slice(col("bk"), lit(1), col("band")).as("pfx")): _*)
   }
 
-  /** The LSH candidate self-join of [[bandRows]] rows, aliased `x` and
-    * `y`: every pair with x.doc_id < y.doc_id that agrees in at least one
-    * band, emitted ONCE — at its first agreeing band. A row agrees at
-    * its own band by the equi-join; it is the first agreeing band exactly
-    * when no earlier band agrees, `first_eq_index(x.pfx, y.pfx) = -1`.
-    * Every column of both sides stays readable as `x.*` / `y.*`.
+  /** The LSH candidate pairs of [[bandRows]] rows, aliased `x` and `y`:
+    * every pair with x.doc_id < y.doc_id that agrees in at least one band,
+    * emitted ONCE — at its first agreeing band, where no earlier band
+    * agrees (`first_eq_index(x.pfx, y.pfx) = -1`). Every column of both
+    * sides stays readable as `x.*` / `y.*`.
     *
-    * Why this shape (each measured on one of its callers):
-    *  - the filter runs inside the join, before any further exchange. A
-    *    `distinct()` or a filter after the payload joins moves every
-    *    multi-band collision through them: on the dup-heavy sf0.1 fixture
-    *    the band join emits 92.3M colliding pairs for 10.2M distinct
-    *    candidates (dd03 +14% with the filter after the token-set joins;
-    *    dd20 767 MB of candidate shuffle instead of 92 MB, 19.8 → 28 s,
-    *    with the dedup at the audit exchange).
-    *  - a row carries `pfx`, not the whole key array: half the array
-    *    bytes on average through the join fan-out (the full-array form
-    *    spent 161 CPU-s in dd20's (64,2) join stage).
-    *  - `bucket` is the FIRST join key, because the sort-merge join's sort
-    *    prefix holds the first key only: `band` has just `bands` distinct
-    *    values, and (band, bucket) order sent nearly every comparison to a
-    *    full row compare (perfbench dedup task CPU ~2.2 s against ~1.5 s).
-    * Keys of different bands never meet, because the join matches `band`
-    * too.
+    * One operator, [[graft.plans.BandPairsExec]], not a self-join. It
+    * requires `ClusteredDistribution(bucket, band)` and child ordering on
+    * `bucket` alone, so the plan reads the band exchange once and sorts it
+    * once on a single radix-sortable key, then walks each bucket run in
+    * one pass: the keys and `pfx` of every member are read once into
+    * primitive arrays, and the first-band rule runs over those before any
+    * row is re-read. Keys of different bands never pair: a pair's two
+    * rows must have equal `band`.
+    *
+    * The exchange is an explicit numbered repartition on (bucket, band) at
+    * the session parallelism, which satisfies that distribution as it
+    * stands. Its rows are small, but the pair expansion in a hot bucket is
+    * quadratic (work ≠ bytes, as in [[pairCounts]]), so AQE must not
+    * coalesce it: left to AQE, dd04's 524 KB band shuffle at sf0.1 was
+    * coalesced to one task, which ran all 2.1M candidates, and ann03's
+    * SRP pairing ran 1.47 → 3.56 s (median of 5 interleaved runs). The
+    * pinned width serves the small callers too: at sf0.1 mm10, mm11 and
+    * ann03 ran 18–22% faster than with the broadcast self-join this
+    * operator replaced (5 of 5 interleaved pairs each); mm12 ran 8%
+    * slower (2.59 → 2.80 s, 2 of 5 faster).
+    *
+    * Why the first-band rule runs inside the pairing, before any further
+    * exchange: a `distinct()` or a filter after the payload joins moves
+    * every multi-band collision through them. On the dup-heavy sf0.1
+    * fixture the band join emits 92.3M colliding pairs for 10.2M distinct
+    * candidates (dd03 +14% with the filter after the token-set joins;
+    * dd20 767 MB of candidate shuffle instead of 92 MB, 19.8 → 28 s, with
+    * the dedup at the audit exchange). A row carries `pfx`, not the whole
+    * key array: half the array bytes on average through the exchange.
     */
   private[graft] def bandPairs(rows: DataFrame): DataFrame =
-    rows.as("x")
-      .join(rows.as("y"),
-        col("x.bucket") === col("y.bucket") && col("x.band") === col("y.band") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .where(HashExprs.firstEqIndex(col("x.pfx"), col("y.pfx")) === lit(-1))
+    graft.plans.BandPairs(rows.repartition(
+      rows.sparkSession.sparkContext.defaultParallelism, col("bucket"), col("band")))
 
   /** LSH banding: one bucket key per band, computed inside the same native
     * expression as the signature ([[graft.functions.MinHashBuckets]]).
@@ -483,19 +491,19 @@ object Dedup {
 
   /** MinHash+LSH candidate pairs, each pair once: (id_a, id_b, toks_a,
     * toks_b) with id_a < id_b, carrying both docs' sorted token-hash sets
-    * for exact verification. Candidates are the [[bandPairs]] self-join of
-    * the sketch's [[bandRows]].
+    * for exact verification. Candidates are the [[bandPairs]] of the
+    * sketch's [[bandRows]].
     *
-    * The exchange is an explicit numbered repartition at the session
-    * parallelism, read by both join sides: its rows are small, and the
-    * pair expansion in a hot bucket is quadratic (work ≠ bytes, as in
-    * [[pairCounts]]). The join strategy is left to AQE, which picks a
-    * sort-merge join at these sizes. A forced shuffled hash join held
-    * 16 MB per task instead of 52 MB on the 8,000-doc perfbench corpus,
-    * where 94% of (band, bucket) groups are singletons, but on the sf0.1
-    * fixture (5,000 docs, 97% of rows in shared buckets, largest bucket
-    * 2,707 docs) it made dd03 about a third slower than the sort-merge
-    * join.
+    * Measured and rejected on the way to the one-pass [[bandPairs]]
+    * operator (perfbench `dedup_minhash`, 8,000 docs, 94% of (band,
+    * bucket) groups singletons; sf0.1 `documents`, 5,000 docs, 97% of rows
+    * in shared buckets, largest bucket 2,707 docs):
+    *  - the sort-merge self-join of the band rows read the band shuffle
+    *    twice and sorted it twice; it was 56% of perfbench task CPU;
+    *  - a forced shuffled hash join cut perfbench CPU by 22% but doubled
+    *    sf0.1 wall (5.7 → 11.1 s);
+    *  - slim band rows, with the first-band filter moved into the verify,
+    *    made sf0.1 14% slower.
     *
     * The token sets join back on the two ids through one sketch subplan,
     * so the second side reuses the first side's exchange (or broadcast).
@@ -508,10 +516,7 @@ object Dedup {
       bands: Int = 32,
       rowsPerBand: Int = 4): DataFrame = {
     val sketch = minhashSketch(docs, idCol, textCol, bands, rowsPerBand)
-    val b = bandRows(sketch.select(col("doc_id"), col("bk")))
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism,
-        col("bucket"), col("band"))
-    bandPairs(b)
+    bandPairs(bandRows(sketch.select(col("doc_id"), col("bk"))))
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
       .join(sketch.select(col("doc_id").as("id_a"), col("toks").as("toks_a")), "id_a")
       .join(sketch.select(col("doc_id").as("id_b"), col("toks").as("toks_b")), "id_b")
@@ -533,15 +538,17 @@ object Dedup {
     *
     * Shuffles: sketches are map-side; candidates are one hash shuffle of
     * per-band (doc_id, band, bucket, pfx) rows at a pinned width
-    * ([[minhashCandidates]]); candidate dedup is [[bandPairs]]' per-row
-    * first-agreeing-band filter inside that join, not a shuffle. The
+    * ([[bandPairs]]); candidate dedup is [[bandPairs]]'
+    * first-agreeing-band rule inside that pairing, not a shuffle. The
     * per-doc token sets join to each side of a pair — hash joins on doc
     * id, linear; AQE broadcasts them while they fit and shuffles them once
-    * (one exchange, reused by both sides) when they do not — and `|A ∩ B|`
-    * is one codegen'd two-pointer merge per pair, so there is no postings
-    * × postings intermediate and no final re-aggregation. Two blank
-    * documents have empty token sets, so their 0/0 Jaccard is null and
-    * they are not emitted.
+    * (one exchange, reused by both sides) when they do not — and the
+    * Jaccard is one codegen'd two-pointer merge per pair
+    * ([[graft.functions.SortedJaccard]]), evaluated once per rejected
+    * candidate where the `jaccard >= threshold` filter is pushed into the
+    * join, so there is no postings × postings intermediate and no final
+    * re-aggregation. Two blank documents have empty token sets, so their
+    * 0/0 Jaccard is null and they are not emitted.
     */
   def minhashDupPairs(
       docs: DataFrame,
@@ -550,13 +557,10 @@ object Dedup {
       textCol: String = "text",
       bands: Int = 32,
       rowsPerBand: Int = 4): DataFrame =
-    jaccardAtLeast(
-      minhashCandidates(docs, idCol, textCol, bands, rowsPerBand)
-        .select(col("id_a"), col("id_b"),
-          HashExprs.sortedIntersectSize(col("toks_a"), col("toks_b")).as("n_common"),
-          size(col("toks_a")).as("na"), size(col("toks_b")).as("nb")),
-      threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    minhashCandidates(docs, idCol, textCol, bands, rowsPerBand)
+      .select(col("id_a"), col("id_b"),
+        HashExprs.sortedJaccard(col("toks_a"), col("toks_b")).as("jaccard"))
+      .where(col("jaccard") >= threshold)
 
   /** LSH banding OPERATING CURVE — the dedup-side twin of
     * [[Similarity.ivfOperatingCurve]] (ann21): per banding config
@@ -573,9 +577,8 @@ object Dedup {
     * lineage-cut; each config derives its per-band bucket keys by folding
     * contiguous signature slices, so sweeping configs re-reads ≤
     * docs × nHashes longs, never the corpus. Candidate generation per
-    * config is the [[bandPairs]] self-join, as in [[minhashCandidates]];
-    * unlike there, its exchange width is left to AQE and the audit join's
-    * width is pinned instead.
+    * config is [[bandPairs]], as in [[minhashCandidates]], and the audit
+    * join's width is pinned too.
     *
     * Unlike [[minhashDupPairs]] (xxhash64, engine-private, gated on its
     * exact-verified OUTPUT), this signature is built from the
@@ -822,15 +825,11 @@ object Dedup {
     */
   private def verifyExactJaccard(
       cands: DataFrame, indexDocs: DataFrame, threshold: Double): DataFrame =
-    jaccardAtLeast(
-      cands
-        .join(indexDocs.select(col("doc_id").as("corpus_id"),
-          col("n_tok").as("nb"), col("toks")), "corpus_id")
-        .select(col("batch_id"), col("corpus_id"),
-          HashExprs.sortedIntersectSize(col("qtoks"), col("toks")).as("n_common"),
-          size(col("qtoks")).as("na"), col("nb")),
-      threshold)
-      .select(col("batch_id"), col("corpus_id"), col("jaccard"))
+    cands
+      .join(indexDocs.select(col("doc_id").as("corpus_id"), col("toks")), "corpus_id")
+      .select(col("batch_id"), col("corpus_id"),
+        HashExprs.sortedJaccard(col("qtoks"), col("toks")).as("jaccard"))
+      .where(col("jaccard") >= threshold)
 
   /** Incremental near-dedup of a NEW batch against a persisted corpus
     * index: sketch ONLY the batch (the index side is consumed as stored —
@@ -899,14 +898,15 @@ object Dedup {
 
   /** SimHash near-dup pairs with Hamming distance ≤ maxHamming (≤ 3 by
     * default): pigeonhole blocking on 4×16-bit chunks (any pair within
-    * distance 3 shares at least one exact chunk) → equi-join per chunk →
+    * distance 3 shares at least one exact chunk) → pairs per chunk →
     * exact `bit_count(xor)` verify.
     *
-    * A pair can collide in up to 4 chunks; the chunk join is the
-    * [[bandPairs]] self-join, which keeps it once, at its first agreeing
-    * chunk, with no `distinct()` shuffle of the candidate stream. No
-    * cartesian; no exchange between the chunk join and the hamming filter
-    * (PlanSpec asserts the aggregate-free plan).
+    * A pair can collide in up to 4 chunks; the chunk pairing is
+    * [[bandPairs]], which keeps it once, at its first agreeing chunk,
+    * with no `distinct()` shuffle of the candidate stream. No cartesian;
+    * no exchange between the pairing and the hamming filter, and one
+    * child, so `simhash64` runs once per document (PlanSpec asserts
+    * both).
     */
   def simhashDupPairs(
       docs: DataFrame,
@@ -922,7 +922,7 @@ object Dedup {
     * Hamming distance ≤ maxHamming. The four 16-bit chunks of `sh` are
     * the band keys of a [[bandRows]] table (pigeonhole blocking, exact for
     * maxHamming ≤ 3: a pair within distance 3 must agree on one whole
-    * chunk), candidates come from the [[bandPairs]] self-join, and the
+    * chunk), candidates come from [[bandPairs]], and the
     * verify is `bit_count(xor)` over the `sh` each side carries — no
     * cartesian, no aggregate between join and verify. Callers: SimHash over text
     * (dd04) and perceptual aHash over decoded images (mm10) — the same
@@ -968,8 +968,8 @@ object Dedup {
   /** Embedding near-dup pairs: SRP-LSH blocked candidates
     * ([[Similarity.lshCandidatePairs]] — ids only through the bucket
     * shuffle, per-row multi-table dedup) re-joined to their vectors and
-    * exact-cosine rescored. No cartesian anywhere: the bucket self-join is
-    * an equi-join, and the vector fetch is two hash joins on vid.
+    * exact-cosine rescored. No cartesian anywhere: the bucket pairing is
+    * one pass per bucket, and the vector fetch is two hash joins on vid.
     *
     * Recall is a deterministic function of (nPlanes, nTables) — the SRP
     * planes are hash-derived, not random.

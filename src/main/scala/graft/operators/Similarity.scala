@@ -236,7 +236,7 @@ object Similarity {
 
   /** LSH candidate pairs: `nTables` independent sign-projection tables;
     * pairs sharing any (table, bucket), each once — the tables are the
-    * bands of the [[Dedup.bandPairs]] self-join. One hash shuffle on the
+    * bands of [[Dedup.bandPairs]]. One hash shuffle on the
     * bucket key, carrying only (id, bucket keys) — never the vectors.
     */
   def lshCandidatePairs(

@@ -143,12 +143,6 @@ case class TopKPerKeyExec(
 }
 
 object TopKPerKey {
-  /** Registration must be check-then-set atomic: extraStrategies is a
-    * plain var on ExperimentalMethods, and two concurrent first calls
-    * would otherwise both append (double planning candidates).
-    */
-  private val registrationLock = new Object
-
   /** Public entry: top-`k` rows per `keyCols` group under `order`
     * ((column, descending) pairs). CONTRACT: `order` must be a TOTAL
     * order over the input — include a unique tie-break column (id/key) as
@@ -162,11 +156,7 @@ object TopKPerKey {
     require(k > 0, "k must be positive")
     require(order.nonEmpty, "order must name at least one column (with a unique tie-break)")
     val spark = df.sparkSession
-    registrationLock.synchronized {
-      if (!spark.experimental.extraStrategies.exists(_.isInstanceOf[TopKPerKeyStrategy]))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ new TopKPerKeyStrategy
-    }
+    Strategies.install(spark, new TopKPerKeyStrategy)
     val analyzed = df.queryExecution.analyzed
     def attr(n: String): Attribute = analyzed.output.find(_.name == n).getOrElse(
       throw new IllegalArgumentException(

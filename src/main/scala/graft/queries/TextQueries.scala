@@ -573,6 +573,11 @@ object TextQueries {
     */
   private def dedupSimhash(spark: SparkSession, dir: String): DataFrame =
     Dedup.simhashDupPairs(Tables(spark, dir).documents, maxHamming = 3)
+      // dd03's boundary: without it orderBy's range sampling re-runs the
+      // chunk pairing, whose hot bucket sits in one task (and is sampled
+      // again as an imbalanced partition). Hashed, not round-robin: that
+      // would sort the hot task's pairs before its shuffle write
+      .repartition(spark.sparkContext.defaultParallelism, col("id_a"), col("id_b"))
       .orderBy(col("id_a"), col("id_b"))
   private val dedupSimhashSql = {
     val fnv =

@@ -1,12 +1,24 @@
 package graft
 
-import org.apache.spark.sql.execution.QueryExecution
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.{Success, TaskContext}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SortExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
 import graft.functions.{HashExprs, TextFunctions}
 import graft.operators.Dedup
+import graft.plans.BandPairsExec
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -190,6 +202,161 @@ class DedupSpec extends SparkSpec {
     // a 200-row hot bucket in band 0, distinct keys in the other bands
     check("hot bucket",
       (200L to 1L by -1L).map(i => i -> Option(Seq(7L, 1000L + i, 2000L + i))))
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** What the band-row self-join gave: every two input rows with non-null
+    * ids a < b and key arrays agreeing at some position, as (a, b) once.
+    */
+  private def selfJoinPairs(rows: Seq[(Option[Long], Option[Seq[Long]])]): Seq[(Long, Long)] =
+    (for {
+      (Some(a), Some(ka)) <- rows; (Some(b), Some(kb)) <- rows
+      if a < b && ka.zip(kb).exists { case (p, q) => p == q }
+    } yield (a, b)).sorted
+
+  /** Sizes of the (band, key) groups of the input's key arrays. */
+  private def groupSizes(rows: Seq[(Option[Long], Option[Seq[Long]])]): Seq[Int] =
+    rows.flatMap(_._2.toSeq.flatMap(_.zipWithIndex)).groupBy(identity).values.map(_.size).toSeq
+
+  /** [[Dedup.bandPairs]] over (doc_id, bk) rows: the pairs, sorted, and the exec that made them. */
+  private def bandPairsOf(rows: Seq[(Option[Long], Option[Seq[Long]])]): (Seq[(Long, Long)], BandPairsExec) = {
+    val df = Dedup.bandPairs(Dedup.bandRows(rows.toDF("doc_id", "bk"))).select($"x.doc_id", $"y.doc_id")
+    val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val execs = Plans.collect(df.queryExecution.executedPlan) { case e: BandPairsExec => e }
+    assert(execs.size == 1, df.queryExecution.executedPlan)
+    (got, execs.head)
+  }
+
+  test("band pairs report candidates, groups of 2+ rows and the largest group, equal to brute force") {
+    // 4 bands over 6 key values, so one key value is a group in several
+    // bands; and a 200-row hot bucket in band 0
+    val rnd = new scala.util.Random(29)
+    val random = rnd.shuffle((1L to 120L).map(i => Option(i) -> Option(Seq.fill(4)(rnd.nextInt(6).toLong))))
+    val hot = (200L to 1L by -1L).map(i => Option(i) -> Option(Seq(7L, 1000L + i, 2000L + i)))
+    for ((name, rows) <- Seq("random" -> random, "hot bucket" -> hot)) {
+      val (got, exec) = bandPairsOf(rows)
+      assert(got == selfJoinPairs(rows), name)
+      val sizes = groupSizes(rows)
+      def metric(k: String) = exec.metrics(k).value
+      assert(metric("numCandidates") == got.size && metric("numOutputRows") == got.size, name)
+      assert(metric("numGroups") == sizes.count(_ >= 2), name)
+      assert(metric("maxGroupRows") == sizes.max, name)
+    }
+  }
+
+  test("band pairs: duplicate ids give the self-join's multiset; null ids and one key in two bands never pair") {
+    // id 1 twice and id 2 twice: each row of one id pairs with each row of
+    // the other at its first agreeing band; rows of one id never pair
+    val dups = Seq(1L -> Seq(5L, 6L), 1L -> Seq(5L, 7L), 2L -> Seq(5L, 7L), 2L -> Seq(8L, 7L),
+      3L -> Seq(9L, 7L)).map { case (i, k) => Option(i) -> Option(k) }
+    val (gotDups, _) = bandPairsOf(dups)
+    assert(gotDups == selfJoinPairs(dups))
+    assert(gotDups.count(_ == (1L, 2L)) == 3 && gotDups.count(_ == (2L, 3L)) == 2)
+    val nulls = Seq(None -> Seq(5L, 6L), None -> Seq(5L, 6L), Some(1L) -> Seq(5L, 6L),
+      Some(2L) -> Seq(4L, 6L)).map { case (i, k) => i -> Option(k) }
+    assert(bandPairsOf(nulls)._1 == Seq((1L, 2L)))
+    // key 5 is band 0 of doc 1 and band 1 of docs 2 and 3
+    val crossBand = Seq(1L -> Seq(5L, 1L), 2L -> Seq(2L, 5L), 3L -> Seq(3L, 5L))
+      .map { case (i, k) => Option(i) -> Option(k) }
+    assert(bandPairsOf(crossBand)._1 == Seq((2L, 3L)))
+  }
+
+  test("band pairs over string ids pair and orient as SQL compares them, duplicates and nulls included") {
+    // ids whose string order differs from their numeric order ("10" < "9"),
+    // a repeated id, a null id and an empty string, over 3 bands of 4 keys
+    val rnd = new scala.util.Random(31)
+    val ids = (1 to 60).map(i => Option(i.toString)) ++ Seq(Some("7"), Some("12"), None, Some(""))
+    val rows = rnd.shuffle(ids.map(i => i -> Seq.fill(3)(rnd.nextInt(4).toLong)))
+    val want = (for {
+      (Some(a), ka) <- rows; (Some(b), kb) <- rows
+      if a < b && ka.zip(kb).exists { case (p, q) => p == q }
+    } yield (a, b)).sorted
+    val got = Dedup.bandPairs(Dedup.bandRows(rows.toDF("doc_id", "bk")))
+      .select($"x.doc_id", $"y.doc_id").as[(String, String)].collect().toSeq.sorted
+    assert(got.nonEmpty && got == want)
+  }
+
+  test("minhash dup pairs over string ids equal brute force") {
+    val corpus = trickyCorpus.take(60)
+    val want = bruteForcePairs(corpus, 0.8).map { case ((a, b), j) =>
+      (if (s"d$a" < s"d$b") (s"d$a", s"d$b") else (s"d$b", s"d$a")) -> j
+    }
+    val got = Dedup.minhashDupPairs(corpus.map { case (i, t) => (s"d$i", t) }.toDF("doc_id", "text"), 0.8)
+      .as[(String, String, Double)].collect().toSeq
+    assert(want.nonEmpty && got.map { case (a, b, j) => (a, b) -> j }.toMap == want && got.size == want.size)
+  }
+
+  test("sorted_jaccard is null for two empty sets when its inputs are non-nullable") {
+    // text declared NOT NULL makes the token sets non-nullable; generated
+    // code must still report the 0/0 Jaccard as null, not NaN (NaN >= t)
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType, nullable = false), StructField("text", StringType, nullable = false)))
+    def notNull(rows: Seq[(Long, String)]) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (i, t) => Row(i, t) }), schema)
+    val corpus = notNull(Seq((1L, ""), (2L, "  "), (3L, "alpha beta"), (4L, "alpha beta")))
+    val batch = notNull(Seq((11L, ""), (12L, "alpha beta")))
+    val confs = Seq("spark.sql.codegen.fallback" -> "false", "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val before = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val index = Dedup.minhashIndex(corpus)
+      assert(!index.schema("toks").nullable)
+      assert(Dedup.minhashDupPairs(corpus, 0.5).as[(Long, Long, Double)].collect().toSeq == Seq((3L, 4L, 1.0)))
+      val found = Dedup.dedupAgainstIndex(batch, Dedup.indexBuckets(index), index, threshold = 0.5)
+        .as[(Long, Long, Double)].collect().toSet
+      assert(found == Set((12L, 3L, 1.0), (12L, 4L, 1.0)))
+    } finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  test("band pairs: a group past the buffer's in-memory threshold spills and still pairs exactly") {
+    // band 0 is one 60-row group, band 1 seven groups whose pairs all agree at band 0 already
+    val rows = (1L to 60L).map(i => Option(i) -> Option(Seq(3L, 100L + i % 7, 200L + i)))
+    val confs = Seq("spark.sql.sortMergeJoinExec.buffer.in.memory.threshold" -> "4",
+      "spark.sql.sortMergeJoinExec.buffer.spill.threshold" -> "8")
+    val before = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val (got, exec) = bandPairsOf(rows)
+      assert(got.size == 60 * 59 / 2 && got == selfJoinPairs(rows))
+      assert(exec.metrics("spillSize").value > 0, "the group never spilled")
+      assert(exec.metrics("maxGroupRows").value == 60)
+    } finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  test("minhashDupPairs pairs band rows in one operator: one sort on bucket, one read of the band exchange") {
+    val docs = trickyCorpus.toDF("doc_id", "text").repartition(3)
+    val df = Dedup.minhashDupPairs(docs, 0.8)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val exec = Plans.collect(plan) { case e: BandPairsExec => e }
+    assert(exec.size == 1, plan)
+    val sorts = Plans.collect(plan) { case s: SortExec => s }
+    assert(sorts.size == 1 && Plans.collect(exec.head.child) { case s: SortExec => s } == sorts, plan)
+    assert(sorts.head.sortOrder.map(_.child.references.toSeq.map(_.name)) == Seq(Seq("bucket")), plan)
+    Plans.collect(plan) { case j: BaseJoinExec => j }.foreach { j =>
+      assert(!(j.leftKeys ++ j.rightKeys).exists(_.references.exists(_.name == "bucket")), plan)
+    }
+    val band = Plans.collect(plan) {
+      case e @ ShuffleExchangeExec(h: HashPartitioning, _, _, _) if h.references.exists(_.name == "bucket") => e
+    }
+    assert(band.size == 1, plan)
+    val written = band.head.metrics("shuffleRecordsWritten").value
+    assert(written == trickyCorpus.size * 32L && band.head.metrics("recordsRead").value == written)
+  }
+
+  test("a failed attempt of a band-pair task leaves minhashDupPairs' output as an unfailed run's") {
+    val dir = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get("target"), "band_retry")
+    val Seq(clean, retried) = Seq("clean.txt", "retried.txt").map(f => dir.resolve(f).toString)
+    val (ok, out) = SparkSpec.runChildJvm("graft.BandPairsRetryDrill", Seq(clean, retried),
+      dir.resolve("drill.log"))
+    assert(ok, out.takeRight(4000))
+    assert(out.contains("drill: failed attempts 1, pair stage is the result stage true true"), out.takeRight(4000))
+    def lines(f: String) = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(f)).asScala.toSeq
+    val want = lines(clean)
+    assert(want.size > 100 && lines(retried) == want)
+    dir.toFile.listFiles().foreach(_.delete())
+    dir.toFile.delete()
   }
 
   /** Near-duplicates that only the tokenizer's edge cases make equal: case,
@@ -728,5 +895,52 @@ class DedupSpec extends SparkSpec {
     assert(r.length == 1)
     assert(r(0).getLong(2) == 0L && r(0).getLong(3) == 0L && r(0).getLong(4) == 0L)
     assert(r(0).getLong(5) == 0L && r(0).getLong(6) == 0L) // ticks guard div-0
+  }
+}
+
+/** The child-JVM half of the retry drill in [[DedupSpec]]: on a
+  * `local[4,3]` session, `minhashDupPairs` of [[corpus]] into `clean`,
+  * then again into `retried` with the first attempt of the first task to
+  * emit a pair failing there, in the stage that runs the band-pair
+  * operator. Prints the failed attempts and whether, in each run, that
+  * stage is the result stage (one shuffle, under the operator).
+  */
+object BandPairsRetryDrill extends AdaptiveSparkPlanHelper {
+  private val fired = new AtomicBoolean(false)
+
+  /** 1,200 docs of 30 words from 3,000; 300 of them a one-word variant of another. */
+  def corpus: Seq[(Long, String)] = {
+    val rnd = new scala.util.Random(7)
+    val base = Seq.fill(900)(Seq.fill(30)(s"w${rnd.nextInt(3000)}"))
+    val variants = base.zipWithIndex.collect { case (w, i) if i % 3 == 0 => w.updated(rnd.nextInt(30), s"v$i") }
+    (base ++ variants).zipWithIndex.map { case (w, i) => (i.toLong, w.mkString(" ")) }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val Array(clean, retried) = args
+    val spark = graft.core.GraftSession.builder("local[4,3]").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    import spark.implicits._
+    val failed = new AtomicInteger
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = if (e.reason != Success) failed.incrementAndGet()
+    })
+    val failFirstAttempt = udf { (arm: Boolean) =>
+      if (arm && TaskContext.get().attemptNumber() == 0 && fired.compareAndSet(false, true))
+        throw new IllegalStateException("injected band-pair task failure")
+      true
+    }.asNondeterministic()
+    val docs = corpus.toDF("doc_id", "text")
+    val resultStage = for ((out, arm) <- Seq(clean -> false, retried -> true)) yield {
+      val pairs = Dedup.minhashDupPairs(docs, 0.8).where(failFirstAttempt(lit(arm)))
+      val rows = pairs.as[(Long, Long, Double)].collect()
+        .map { case (a, b, j) => s"$a $b ${java.lang.Double.doubleToLongBits(j)}" }.sorted
+      java.nio.file.Files.write(java.nio.file.Paths.get(out), rows.toSeq.asJava)
+      val plan = pairs.queryExecution.executedPlan
+      collect(plan) { case e: ShuffleExchangeExec => e }.size == 1 &&
+        collect(plan) { case e: BandPairsExec => e }.size == 1
+    }
+    spark.stop() // drains the listener bus
+    println(s"drill: failed attempts ${failed.get}, pair stage is the result stage ${resultStage.mkString(" ")}")
   }
 }

@@ -55,6 +55,20 @@ class PlanSpec extends SparkSpec {
     val p = planOf("dd04_simhash_pairs")
     assert(!p.contains("HashAggregate"), p)
     assert(!p.contains("CartesianProduct"), p)
+    // one child, not two join sides: the kernel runs once per document,
+    // and no null filter re-evaluates it at the scan
+    assert("simhash64\\(".r.findAllIn(p).size == 1, p)
+    assert(!p.contains("isnotnull(simhash64"), p)
+  }
+
+  test("dd03: the exact-Jaccard verify merges once per rejected candidate") {
+    // the pushed `jaccard >= t` join condition holds the one merge; the
+    // projection above recomputes it only for the kept pairs
+    val p = planOf("dd03_minhash_pairs")
+    assert(!p.contains("sorted_intersect_size"), p)
+    val cond = p.linesIterator.filter(_.contains("Join")).map("sorted_jaccard\\(".r.findAllIn(_).size).toSeq
+    assert(cond.sum == 1, p)
+    assert("sorted_jaccard\\(".r.findAllIn(p).size == 2, p)
   }
 
   test("mm10/mm11: fingerprint pairing is an equi-join over chunk keys — no product") {

@@ -3,8 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
-import java.lang.management.ManagementFactory
-import java.util.concurrent.{ConcurrentLinkedQueue, TimeUnit}
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
@@ -239,19 +238,10 @@ class RangeBoundsSpec extends SparkSpec {
     val dir = tempDir("wc_retry")
     val Seq(in, clean, retried) = Seq("in", "clean", "retried").map(d => dir.resolve(d).toString)
     RangeBoundsSpec.elevenFiles(dir.resolve("in"))
-    // a JVM holds one SparkContext, and local mode retries a task only
-    // under a `local[N,F]` master: the drill runs in a child JVM
-    val java = Paths.get(sys.props("java.home"), "bin", "java").toString
-    val jvmArgs = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
-      .filterNot(a => a.startsWith("-Xm") || a.startsWith("-agentlib") || a.startsWith("-javaagent"))
-    val log = dir.resolve("drill.log").toFile
-    val proc = new ProcessBuilder((Seq(java) ++ jvmArgs ++ Seq("-Xmx1g", "-cp",
-      sys.props("java.class.path"), "graft.RangeRetryDrill", in, clean, retried)).asJava)
-      .redirectErrorStream(true).redirectOutput(log).start()
-    val finished = proc.waitFor(300, TimeUnit.SECONDS)
-    if (!finished) proc.destroyForcibly()
-    val out = new String(Files.readAllBytes(log.toPath), UTF_8)
-    assert(finished && proc.exitValue() == 0, out.takeRight(4000))
+    // the drill needs a `local[N,F]` master: it runs in a child JVM
+    val (ok, out) = SparkSpec.runChildJvm("graft.RangeRetryDrill", Seq(in, clean, retried),
+      dir.resolve("drill.log"))
+    assert(ok, out.takeRight(4000))
     assert(out.contains("drill: failed attempts 1, sampled exchange true true"), out.takeRight(4000))
     def files(d: String) = Files.list(Paths.get(d)).iterator().asScala
       .filter(_.getFileName.toString.startsWith("part-")).toSeq.sortBy(_.getFileName.toString)
