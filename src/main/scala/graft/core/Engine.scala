@@ -76,6 +76,20 @@ object GraftSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Scoped session-conf override: sets each key for the duration of `f`,
+    * then restores the previous values (or unsets). Queries on OTHER
+    * threads of a shared session could observe the flip mid-flight — the
+    * graft harness runs queries sequentially.
+    */
+  def withConf[T](spark: SparkSession, kvs: (String, String)*)(f: => T): T = {
+    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally old.foreach { case (k, ov) =>
+      ov.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
 }
 
 /** Type-adaptive timestamp column normalization.

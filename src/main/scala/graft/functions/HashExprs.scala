@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnShim
 import org.apache.spark.sql.internal.SQLConf
@@ -323,16 +322,11 @@ object HashImpl {
   * kept only in the row whose band equals this index.
   */
 case class FirstEqIndex(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
   override def dataType: DataType = IntegerType
   override def prettyName: String = "first_eq_index"
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two array<bigint> inputs, got $other")
-    }
+  // every `inputTypes` leaves its type to inference: `AbstractDataType` is private[sql]
+  override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
   override protected def nullSafeEval(a: Any, b: Any): Any =
     HashImpl.firstEqIndex(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -348,16 +342,10 @@ case class FirstEqIndex(left: Expression, right: Expression)
   * merge over primitive longs.
   */
 case class SortedIntersectSize(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
   override def dataType: DataType = IntegerType
   override def prettyName: String = "sorted_intersect_size"
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two array<bigint> inputs, got $other")
-    }
+  override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
   override protected def nullSafeEval(a: Any, b: Any): Any =
     HashImpl.sortedIntersectCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -373,18 +361,12 @@ case class SortedIntersectSize(left: Expression, right: Expression)
   * pushed into a join condition evaluates it once per candidate.
   */
 case class SortedJaccard(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
   override def dataType: DataType = DoubleType
   // null for two empty sets even where both inputs are non-nullable
   override def nullable: Boolean = true
   override def prettyName: String = "sorted_jaccard"
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two array<bigint> inputs, got $other")
-    }
+  override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val j = HashImpl.sortedJaccard(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
     if (j.isNaN) null else j
@@ -398,21 +380,13 @@ case class SortedJaccard(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Input contract shared by the sketch expressions: one array<string>. */
-trait TokenArrayExpression extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<string> input, got ${other.simpleString}")
-    }
-}
-
 /** `minhash_sig(tokens, k)` → array<bigint> of length k. */
-case class MinHashSig(child: Expression, k: Int) extends TokenArrayExpression {
+case class MinHashSig(child: Expression, k: Int)
+    extends UnaryExpression with ExpectsInputTypes {
   require(k > 0, "k must be positive")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_sig"
+  override def inputTypes = Seq(ArrayType(StringType))
   override protected def nullSafeEval(input: Any): Any =
     HashImpl.minhash(input.asInstanceOf[ArrayData], k)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -425,10 +399,11 @@ case class MinHashSig(child: Expression, k: Int) extends TokenArrayExpression {
   * LSH bucket key per band.
   */
 case class MinHashBuckets(child: Expression, bands: Int, rowsPerBand: Int)
-    extends TokenArrayExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(bands > 0 && rowsPerBand > 0, "bands and rowsPerBand must be positive")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_buckets"
+  override def inputTypes = Seq(ArrayType(StringType))
   override protected def nullSafeEval(input: Any): Any =
     HashImpl.minhashBuckets(input.asInstanceOf[ArrayData], bands, rowsPerBand)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -437,16 +412,10 @@ case class MinHashBuckets(child: Expression, bands: Int, rowsPerBand: Int)
     copy(child = newChild)
 }
 
-/** Input contract of the sketch kernels that read a text column directly,
-  * and Spark's case-mapping setting, read the way `Lower` reads it.
+/** Spark's case-mapping setting for the sketch kernels that read a text
+  * column directly, read the way `Lower` reads it.
   */
 trait TextKernelExpression extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires string input, got ${other.simpleString}")
-    }
   protected lazy val useICU: Boolean = SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
 }
 
@@ -455,10 +424,11 @@ trait TextKernelExpression extends UnaryExpression {
   * rowsPerBand)`, bit for bit, straight from the text's bytes.
   */
 case class TextMinHashBuckets(child: Expression, bands: Int, rowsPerBand: Int)
-    extends TextKernelExpression {
+    extends TextKernelExpression with ExpectsInputTypes {
   require(bands > 0 && rowsPerBand > 0, "bands and rowsPerBand must be positive")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "text_minhash_buckets"
+  override def inputTypes = Seq(StringType)
   override protected def nullSafeEval(input: Any): Any =
     HashImpl.textMinhashBuckets(input.asInstanceOf[UTF8String], bands, rowsPerBand, useICU)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -472,9 +442,10 @@ case class TextMinHashBuckets(child: Expression, bands: Int, rowsPerBand: Int)
   * `sort_array(transform(filter(array_distinct(tokenize(lower(text))),
   * t -> length(t) > 0), t -> xxhash64(t)))`, straight from the text's bytes.
   */
-case class TextTokenHashes(child: Expression) extends TextKernelExpression {
+case class TextTokenHashes(child: Expression) extends TextKernelExpression with ExpectsInputTypes {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "text_token_hashes"
+  override def inputTypes = Seq(StringType)
   override protected def nullSafeEval(input: Any): Any =
     HashImpl.textTokenHashes(input.asInstanceOf[UTF8String], useICU)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -488,15 +459,10 @@ case class TextTokenHashes(child: Expression) extends TextKernelExpression {
   * `aggregate(transform(split(...)))` HOF fold (CodegenFallback, ~100×
   * slower) that the first fingerprint implementation used.
   */
-case class Fnv64(child: Expression) extends UnaryExpression {
+case class Fnv64(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
   override def prettyName: String = "fnv64"
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires string input, got ${other.simpleString}")
-    }
+  override def inputTypes = Seq(StringType)
   override protected def nullSafeEval(input: Any): Any =
     HashImpl.fnv64(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -514,15 +480,10 @@ case class Fnv64(child: Expression) extends UnaryExpression {
   * `spark.sql.ansi.enabled` (Column `*` THROWS on overflow under ANSI,
   * which the failure drill's cluster session caught).
   */
-case class FnvMix64(child: Expression) extends UnaryExpression {
+case class FnvMix64(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
   override def prettyName: String = "fnv_mix64"
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires string input, got ${other.simpleString}")
-    }
+  override def inputTypes = Seq(StringType)
   override protected def nullSafeEval(input: Any): Any =
     HashImpl.fnvMix64(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -532,9 +493,10 @@ case class FnvMix64(child: Expression) extends UnaryExpression {
 }
 
 /** `simhash64(tokens)` → bigint fingerprint. */
-case class SimHash64(child: Expression) extends TokenArrayExpression {
+case class SimHash64(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash64"
+  override def inputTypes = Seq(ArrayType(StringType))
   override protected def nullSafeEval(input: Any): Any =
     HashImpl.simhash(input.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -547,10 +509,12 @@ case class SimHash64(child: Expression) extends TokenArrayExpression {
   * (distinct k-gram-hash window minima). One native loop per row; see
   * [[HashImpl.winnowFps]] for why the HOF formulation is quadratic.
   */
-case class WinnowFps(child: Expression, k: Int, w: Int) extends TokenArrayExpression {
+case class WinnowFps(child: Expression, k: Int, w: Int)
+    extends UnaryExpression with ExpectsInputTypes {
   require(k > 0 && w > 0, "k and w must be positive")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "winnow_fps"
+  override def inputTypes = Seq(ArrayType(StringType))
   override protected def nullSafeEval(input: Any): Any =
     HashImpl.winnowFps(input.asInstanceOf[ArrayData], k, w)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =

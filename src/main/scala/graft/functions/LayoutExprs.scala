@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.graft.ColumnShim
 import org.apache.spark.sql.types._
 
@@ -65,15 +64,10 @@ object LayoutImpl {
 
 /** `zorder16(x, y)` → bigint Morton key of the two low-16-bit values. */
 case class ZOrder16(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
   override def prettyName: String = "zorder16"
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (LongType, LongType) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two bigint inputs, got $other")
-    }
+  override def inputTypes = Seq(LongType, LongType)
   override protected def nullSafeEval(a: Any, b: Any): Any =
     LayoutImpl.interleave16(a.asInstanceOf[Long], b.asInstanceOf[Long])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -85,15 +79,10 @@ case class ZOrder16(left: Expression, right: Expression)
 
 /** `hilbert16(x, y)` → bigint Hilbert index of the two low-16-bit values. */
 case class Hilbert16(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
   override def prettyName: String = "hilbert16"
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (LongType, LongType) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two bigint inputs, got $other")
-    }
+  override def inputTypes = Seq(LongType, LongType)
   override protected def nullSafeEval(a: Any, b: Any): Any =
     LayoutImpl.hilbert16(a.asInstanceOf[Long], b.asInstanceOf[Long])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =

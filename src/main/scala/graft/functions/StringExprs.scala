@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, CollationFactory, CollationSupport, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnShim
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
@@ -163,14 +162,10 @@ object StringImpl {
 }
 
 /** `nfc_normalize(str)` → the NFC (canonical composition) form of `str`. */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
+case class NfcNormalize(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = StringType
   override def prettyName: String = "nfc_normalize"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got $other")
-  }
+  override def inputTypes = Seq(StringType)
   override protected def nullSafeEval(s: Any): Any =
     StringImpl.nfc(s.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -182,14 +177,10 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 /** `word_tokens(str)` → array<string> of the reference's normalized,
   * non-empty word tokens ([[StringImpl.wordTokens]]); NULL in, NULL out.
   */
-case class WordTokens(child: Expression) extends UnaryExpression {
+case class WordTokens(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "word_tokens"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got $other")
-  }
+  override def inputTypes = Seq(StringType)
   override protected def nullSafeEval(s: Any): Any =
     StringImpl.wordTokens(s.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =

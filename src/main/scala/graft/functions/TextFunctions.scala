@@ -27,6 +27,11 @@ import org.apache.spark.sql.graft.ColumnShim
   * [[wordTokens]] is the engine's form of all three steps (one native
   * pass); [[tokenize]], [[normalizeToken]] and [[isNonEmptyToken]] are the
   * regex specification it is checked against.
+  *
+  * [[nonEmptyTokens]] (split + filter, no normalization) is the one
+  * definition of a text's non-empty whitespace tokens that every query
+  * calls; the native tokenizer of ROADMAP direction 2 replaces that one
+  * definition rather than each call site.
   */
 object TextFunctions {
 
@@ -51,6 +56,12 @@ object TextFunctions {
   /** Predicate: token survives normalization (non-empty). */
   def isNonEmptyToken(token: Column): Column = length(token) > 0
 
+  /** The non-empty whitespace tokens of a text column → array<string>:
+    * [[tokenize]] without the empty token a blank (or leading-tab) text
+    * yields. NULL text gives NULL.
+    */
+  def nonEmptyTokens(text: Column): Column = filter(tokenize(text), isNonEmptyToken(_))
+
   /** `word_tokens(text)`: split, normalize and drop empty tokens in one
     * native pass over the UTF-8 bytes → array<string> with no null or
     * empty element; NULL text gives NULL. Equal to
@@ -65,8 +76,7 @@ object TextFunctions {
 
   /** Whitespace token count; 0 for blank/empty strings. */
   def tokenCount(text: Column): Column =
-    when(length(trim(text)) === 0, lit(0L))
-      .otherwise(size(split(trim(text), "[\\t\\n\\x0B\\f\\r ]+")).cast("long"))
+    when(length(trim(text)) === 0, lit(0L)).otherwise(size(tokenize(text)).cast("long"))
 
   /** BPE-ish subword count: alphanumeric runs + each non-space symbol counts
     * as a token (a cheap proxy for byte-pair tokenizers; deterministic and
@@ -112,13 +122,10 @@ object TextFunctions {
 
   def stopwordRatio(text: Column): Column = {
     val toks  = tokenize(lower(text))
-    val stops = filter_function(toks, t => t.isInCollection(stopwords))
+    val stops = filter(toks, t => t.isInCollection(stopwords))
     when(size(toks) === 0, lit(0.0))
       .otherwise(size(stops).cast("double") / size(toks).cast("double"))
   }
-
-  private def filter_function(arr: Column, f: Column => Column): Column =
-    org.apache.spark.sql.functions.filter(arr, f)
 
   /** Mean token length in characters (0.0 for blank). */
   def meanTokenLen(text: Column): Column =
@@ -153,9 +160,7 @@ object TextFunctions {
     * effect (any run → one space).
     */
   def removeStopwords(text: Column): Column =
-    array_join(
-      org.apache.spark.sql.functions.filter(tokenize(text),
-        t => !lower(t).isInCollection(stopwords)), " ")
+    array_join(filter(tokenize(text), t => !lower(t).isInCollection(stopwords)), " ")
 
   /** Redact email addresses and phone-shaped digit runs. Regex uses
     * character classes and bounded repetition only — the subset that

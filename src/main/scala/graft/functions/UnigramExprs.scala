@@ -2,9 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.graft.ColumnShim
 import org.apache.spark.sql.types._
@@ -120,20 +119,15 @@ object ViterbiImpl {
 
 /** `viterbi_segment(w, model)` → struct<best:bigint, pieces:array<string>>. */
 case class ViterbiSegment(left: Expression, right: Expression,
-    maxPiece: Int, big: Long) extends BinaryExpression {
+    maxPiece: Int, big: Long) extends BinaryExpression with ExpectsInputTypes {
   require(maxPiece > 0, "maxPiece must be positive")
   override def dataType: DataType = StructType(Seq(
     StructField("best", LongType, nullable = false),
     StructField("pieces", ArrayType(StringType, containsNull = false),
       nullable = false)))
   override def prettyName: String = "viterbi_segment"
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, MapType(StringType, LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, map<string,bigint>), got $other")
-    }
+  override def inputTypes =
+    Seq(StringType, MapType(StringType, LongType))
   override protected def nullSafeEval(w: Any, m: Any): Any =
     ViterbiImpl.segment(w.asInstanceOf[UTF8String], m.asInstanceOf[MapData],
       maxPiece, big)

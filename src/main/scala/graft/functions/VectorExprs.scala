@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnShim
 import org.apache.spark.sql.types._
@@ -130,22 +129,12 @@ object VectorImpl {
   }
 }
 
-private[functions] trait DoubleArrayInputs extends Expression {
-  protected def arrayOk(dt: DataType): Boolean = dt match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-}
-
 /** `cosine_sim(a, b)` over two array<double> columns. */
 case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression with DoubleArrayInputs {
+    extends BinaryExpression with ExpectsInputTypes {
   override def dataType: DataType = DoubleType
   override def prettyName: String = "cosine_sim"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (arrayOk(left.dataType) && arrayOk(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<double> inputs, got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
+  override def inputTypes = Seq(ArrayType(DoubleType), ArrayType(DoubleType))
   override protected def nullSafeEval(a: Any, b: Any): Any =
     VectorImpl.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -157,14 +146,11 @@ case class CosineSim(left: Expression, right: Expression)
 
 /** `srp_bucket(vec, nPlanes, planeOffset)` → bigint LSH bucket id. */
 case class SrpBucket(child: Expression, nPlanes: Int, planeOffset: Int)
-    extends UnaryExpression with DoubleArrayInputs {
+    extends UnaryExpression with ExpectsInputTypes {
   require(nPlanes > 0 && nPlanes <= 63, "nPlanes must be in [1, 63]")
   override def dataType: DataType = LongType
   override def prettyName: String = "srp_bucket"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (arrayOk(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<double> input, got ${child.dataType.simpleString}")
+  override def inputTypes = Seq(ArrayType(DoubleType))
   override protected def nullSafeEval(input: Any): Any =
     VectorImpl.srpBucket(input.asInstanceOf[ArrayData], nPlanes, planeOffset)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -175,15 +161,12 @@ case class SrpBucket(child: Expression, nPlanes: Int, planeOffset: Int)
 
 /** `jl_project(vec, inDim, outDim)` → array<double> JL projection. */
 case class JlProject(child: Expression, inDim: Int, outDim: Int)
-    extends UnaryExpression with DoubleArrayInputs {
+    extends UnaryExpression with ExpectsInputTypes {
   require(inDim >= 1 && outDim >= 1 && outDim <= inDim,
     s"need 1 <= outDim <= inDim, got inDim=$inDim outDim=$outDim")
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "jl_project"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (arrayOk(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<double> input, got ${child.dataType.simpleString}")
+  override def inputTypes = Seq(ArrayType(DoubleType))
   override protected def nullSafeEval(input: Any): Any =
     VectorImpl.jlProject(input.asInstanceOf[ArrayData], inDim, outDim)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =

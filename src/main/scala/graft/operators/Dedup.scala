@@ -114,11 +114,10 @@ object Dedup {
       textCol: String = "text"): DataFrame = {
     require(k >= 2, "gram width k must be at least 2")
     // NULL text coalesces to empty (the dedupSpans convention): without it
-    // tokenize(NULL) is NULL, size() reports -1, and the engine would emit
+    // nonEmptyTokens(NULL) is NULL, size() reports -1, and the engine would emit
     // n_tokens=-1 where the oracle emits NULL — a silent divergence on any
     // corpus with null documents (advisor finding r9).
-    val tk = filter(TextFunctions.tokenize(coalesce(col(textCol), lit(""))),
-      t => length(t) > 0)
+    val tk = TextFunctions.nonEmptyTokens(coalesce(col(textCol), lit("")))
     val base = docs.select(col(idCol).as("doc_id"), tk.as("tk"))
     val grams = base.where(size(col("tk")) >= k)
       .select(col("doc_id"),
@@ -1397,8 +1396,7 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     require(k >= 1 && w >= 1, s"k and w must be positive (got k=$k, w=$w)")
-    val toks =
-      filter(TextFunctions.tokenize(lower(col(textCol))), t => length(t) > 0)
+    val toks = TextFunctions.nonEmptyTokens(lower(col(textCol)))
     docs.select(col(idCol).as("doc_id"),
       HashExprs.winnowFps(toks, k, w).as("fps"))
   }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.GraftSession.withConf
 
 /** Iterative graph algorithms beyond connected components
   * ([[Dedup.connectedComponents]]): PageRank in fixed-point integer
@@ -664,22 +665,6 @@ object Graph {
       out.foreach(_ => ())
       release()
       out
-    }
-  }
-
-  /** Scoped session-conf override: sets each key for the duration of `f`,
-    * then restores the previous values (or unsets). Queries on OTHER
-    * threads of a shared session could observe the flip mid-flight — the
-    * graft harness runs queries sequentially, and the flipped confs here
-    * only affect physical planning, never semantics.
-    */
-  private def withConf[T](spark: SparkSession, kvs: (String, String)*)(
-      f: => T): T = {
-    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally old.foreach { case (k, ov) =>
-      ov.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
   }
 

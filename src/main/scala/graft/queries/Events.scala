@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{QueryDef, Tables}
+import graft.core.{GraftSession, QueryDef, Tables}
 import graft.core.QueryDef.{dec, dsum}
 import graft.operators.{AsOfJoin, Funnel, Graph, IncrementalAgg, RangeJoin, TableDiff}
 
@@ -691,16 +691,10 @@ object Events {
     val ev = Tables(spark, dir).events
       .select(col("event_id"), col("event_type"), col("value"))
     ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
-    val modeKey  = "spark.sql.sources.partitionOverwriteMode"
-    val prevMode = spark.conf.getOption(modeKey)
-    spark.conf.set(modeKey, "dynamic")
-    try
+    GraftSession.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
       ev.where(col("event_type") === "purchase")
         .withColumn("value", col("value") * 2)
         .write.mode("overwrite").partitionBy("event_type").parquet(out)
-    finally prevMode match {
-      case Some(m) => spark.conf.set(modeKey, m)
-      case None    => spark.conf.unset(modeKey)
     }
     spark.read.parquet(out)
       .groupBy(col("event_type"))

@@ -22,42 +22,22 @@ import graft.operators.Sketches
   */
 object SketchQueries {
 
-  /** Swap-tracked persist for the KMV sketch (one slot — the
-    * TextQueries.persistSwap convention): sx02 consumes the sketch from
-    * BOTH sides of the pair join, and the renamed aliases defeat
-    * ReuseExchange, so without a cache boundary the whole
-    * tokenize→hash→TopK chain runs twice (verified in the plan dump).
-    * Each invocation releases its predecessor's blocks; [[releaseCaches]]
-    * drops the slot between timed bench runs.
+  /** Slots for [[TextQueries.persistSwap]] (one per cached sketch): sx02
+    * consumes the KMV sketch from BOTH sides of the pair join, and the
+    * renamed aliases defeat ReuseExchange, so without a cache boundary the
+    * whole tokenize→hash→TopK chain runs twice (verified in the plan
+    * dump). Each invocation releases its predecessor's blocks;
+    * [[releaseCaches]] drops the slots between timed bench runs.
     */
   private val lastKmvCache =
     new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
   private val lastSketchCache =
     new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-  private def persistSwap(
-      slot: java.util.concurrent.atomic.AtomicReference[DataFrame],
-      df: DataFrame): DataFrame = {
-    val prev = slot.get()
-    if (prev != null &&
-        prev.queryExecution.analyzed.sameResult(df.queryExecution.analyzed)) {
-      prev.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    } else {
-      val cached =
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val old = slot.getAndSet(cached)
-      if (old != null && (old ne cached)) old.unpersist(blocking = false)
-      cached
-    }
-  }
 
   /** Release the swap-tracked sketch caches (called by perfbench's
     * `Probe` between timed runs, like TextQueries/Graph.releaseCaches).
     */
-  def releaseCaches(): Unit =
-    Seq(lastKmvCache, lastSketchCache).foreach { slot =>
-      val prev = slot.getAndSet(null)
-      if (prev != null) prev.unpersist(blocking = false)
-    }
+  def releaseCaches(): Unit = TextQueries.releaseSlots(lastKmvCache, lastSketchCache)
 
   /** Whitespace-token split of the null-guarded, lowercased text —
     * `TextFunctions.tokenize` parity (dd05 oracle recipe).
@@ -242,7 +222,7 @@ object SketchQueries {
         .otherwise(raise_error(
           lit("sx02 bitmask exact overlap supports at most 64 sources"))
           .cast("int")))
-    val masks = persistSwap(lastKmvCache, grams
+    val masks = TextQueries.persistSwap(lastKmvCache, grams
       .join(broadcast(srcIdx), "source")
       .groupBy(col("g"))
       .agg(bit_or(expr("shiftleft(CAST(1 AS BIGINT), idx)")).as("mask"))
@@ -258,7 +238,7 @@ object SketchQueries {
     // row-shaped sketch). Semantics are the oracle's `kmv` CTE verbatim:
     // union the two sketches, dedup, keep the k smallest (slice of the
     // sorted union), count survivors present in both sides.
-    val skArr = persistSwap(lastSketchCache,
+    val skArr = TextQueries.persistSwap(lastSketchCache,
       graft.plans.TopKPerKey.perKey(
         masks.join(broadcast(srcIdx), expr("(shiftright(mask, idx) & 1) = 1"))
           .select(col("source"), col("h"))

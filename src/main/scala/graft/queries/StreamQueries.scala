@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.GraftSession.withConf
 import graft.core.QueryDef
 import graft.streaming.StreamOps
 
@@ -10,6 +11,13 @@ import graft.streaming.StreamOps
   * the same batch DuckDB oracle — proving stream/batch semantic parity.
   */
 object StreamQueries {
+
+  /** The RocksDB state-store provider, which `transformWithState` requires
+    * (multiple column families): the queries that need it set it with
+    * [[graft.core.GraftSession.withConf]] for their own run.
+    */
+  private val RocksDbStateStore = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Tumbling 10-min windows via the streaming engine, complete mode. */
   private def streamTumbling(spark: SparkSession, dir: String): DataFrame = {
@@ -149,11 +157,7 @@ object StreamQueries {
     */
   private def streamTws(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(spark, RocksDbStateStore) {
       val src = StreamOps.nanosToTs(
         StreamOps.parquetStream(spark, dir, "events.parquet"), "ts")
       StreamOps.runToMemory(spark, StreamOps.perTypeCounts(src),
@@ -161,11 +165,6 @@ object StreamQueries {
           mode = org.apache.spark.sql.streaming.OutputMode.Append)
         .select(col("user_id"), col("event_type"), col("n"), col("user_total"))
         .orderBy(col("user_id"), col("event_type"))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
     }
   }
   private val streamTwsSql =
@@ -828,11 +827,7 @@ object StreamQueries {
     */
   private def streamEwma(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(spark, RocksDbStateStore) {
       // value IS NOT NULL on BOTH sides: as[TsValueEvent] throws on a
       // NULL value and the oracle's ordered list() would keep it (ADVICE
       // r7 — the fixture schema permits null-valued events, cf. ev34)
@@ -844,11 +839,6 @@ object StreamQueries {
           mode = org.apache.spark.sql.streaming.OutputMode.Append)
         .select(col("user_id"), col("n"), col("ewma"))
         .orderBy(col("user_id"))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
     }
   }
   private val streamEwmaSql =
@@ -875,13 +865,7 @@ object StreamQueries {
     */
   private def streamSample(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    // transformWithState requires the RocksDB provider (multiple column
-    // families) — set/restore around the run, the st20 pattern
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(spark, RocksDbStateStore) {
       val uSpan = 1L << 62
       val src = StreamOps.parquetStream(spark, dir, "documents.parquet")
         .select(col("doc_id"), col("source"),
@@ -897,11 +881,6 @@ object StreamQueries {
         .orderBy(col("prio").asc, col("doc_id"))
         .limit(200)
         .select(col("doc_id"), col("source"), col("n_chars"), col("u"))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
     }
   }
 
@@ -1039,11 +1018,7 @@ object StreamQueries {
     */
   private def streamDedupState(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(spark, RocksDbStateStore) {
       val src = StreamOps.fanOut(
         StreamOps.parquetStream(spark, dir, "documents.parquet"))
       val fps = src.select(graft.functions.HashExprs.fnv64(
@@ -1052,11 +1027,6 @@ object StreamQueries {
           s"graft_stream_dedup_state_${System.nanoTime()}",
           mode = org.apache.spark.sql.streaming.OutputMode.Append)
         .orderBy(col("fp"))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
     }
   }
   private val streamDedupStateSql =

@@ -195,7 +195,7 @@ object TextQueries {
   }
 
   private def gopherRules(spark: SparkSession, dir: String): DataFrame = {
-    val toks = filter(split(trim(lower(col("text"))), "[\\t\\n\\x0B\\f\\r ]+"), t => length(t) > 0)
+    val toks = TextFunctions.nonEmptyTokens(lower(col("text")))
     val d = Tables(spark, dir).documents.select(col("source"), toks.as("toks"))
     val (rWc, rMwl, rAlpha, rStop) = gopherRuleCols(col("toks"))
     val rules = d.select(col("source"),
@@ -249,7 +249,7 @@ object TextQueries {
     */
   private def fullPipeline(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
-    val toks = filter(split(trim(lower(col("text"))), "[\\t\\n\\x0B\\f\\r ]+"), t => length(t) > 0)
+    val toks = TextFunctions.nonEmptyTokens(lower(col("text")))
     val (rWc, rMwl, rAlpha, rStop) = gopherRuleCols(toks)
     // materialized once (ckpt): the HOF-heavy rule filter feeds BOTH the
     // span-dedup input and the source join-back — without the cut the
@@ -259,7 +259,7 @@ object TextQueries {
       .select(col("doc_id"), col("source"), col("text")))
     val dd = Dedup.dedupSpans(kept.select(col("doc_id"), col("text")), segLen = 120)
       .where(col("n_kept") > 0)
-    val outToks = filter(split(trim(col("text_dedup")), "[\\t\\n\\x0B\\f\\r ]+"), t => length(t) > 0)
+    val outToks = TextFunctions.nonEmptyTokens(col("text_dedup"))
     dd.join(kept.select(col("doc_id"), col("source")), "doc_id")
       .select(col("source"), size(outToks).as("n_toks"),
         length(col("text_dedup")).as("n_chars"))
@@ -2706,7 +2706,7 @@ object TextQueries {
     * multi-query sweep to one cached plan per slot (ADVICE r7: the
     * caches otherwise accumulate for the session).
     */
-  private def persistSwap(
+  private[queries] def persistSwap(
       slot: java.util.concurrent.atomic.AtomicReference[DataFrame],
       df: DataFrame): DataFrame = {
     val prev = slot.get()
@@ -2739,9 +2739,12 @@ object TextQueries {
     * ReuseExchange already shares their subplans and the cache boundary
     * only added overhead — see bigramLmScore.)
     */
-  def releaseCaches(): Unit =
-    Seq(lastDsirCache, lastBpeCache, lastUnigramCache)
-      .foreach { slot =>
+  def releaseCaches(): Unit = releaseSlots(lastDsirCache, lastBpeCache, lastUnigramCache)
+
+  /** Empty each [[persistSwap]] slot, releasing its cached blocks. */
+  private[queries] def releaseSlots(
+      slots: java.util.concurrent.atomic.AtomicReference[DataFrame]*): Unit =
+    slots.foreach { slot =>
       val prev = slot.getAndSet(null)
       if (prev != null) prev.unpersist(blocking = false)
     }
@@ -2766,8 +2769,7 @@ object TextQueries {
     val fp = 1L << 20
     val toks = Tables(spark, dir).documents
       .select(col("doc_id"),
-        filter(TextFunctions.tokenize(lower(col("text"))),
-          t => length(t) > 0).as("ts"))
+        TextFunctions.nonEmptyTokens(lower(col("text"))).as("ts"))
     val docBg = toks.where(size(col("ts")) >= 2)
       .select(col("doc_id"), explode(expr(
         "transform(sequence(1, size(ts) - 1), " +
@@ -2838,8 +2840,7 @@ object TextQueries {
     val fpScale = 1L << 20
     val toks = Tables(spark, dir).documents
       .select(col("doc_id"),
-        filter(TextFunctions.tokenize(lower(col("text"))),
-          t => length(t) > 0).as("ts"))
+        TextFunctions.nonEmptyTokens(lower(col("text"))).as("ts"))
     val docBg = toks.where(size(col("ts")) >= 2)
       .select(col("doc_id"), explode(expr(
         "transform(sequence(1, size(ts) - 1), " +
@@ -2963,8 +2964,7 @@ object TextQueries {
     val nBuckets = 1024L
     val toks = Tables(spark, dir).documents
       .select(col("doc_id"), col("lang"),
-        filter(TextFunctions.tokenize(lower(col("text"))),
-          t => length(t) > 0).as("ts"))
+        TextFunctions.nonEmptyTokens(lower(col("text"))).as("ts"))
       .where(size(col("ts")) >= 2)
     // the (doc, bucket) rollup feeds TWO consumers (the fused count
     // rollup below and the scoring join) and Spark does not dedup common
@@ -3818,8 +3818,7 @@ object TextQueries {
     val fpScale = 1L << 20
     val toks = Tables(spark, dir).documents
       .select(col("doc_id"), col("lang"),
-        filter(TextFunctions.tokenize(lower(col("text"))),
-          t => length(t) > 0).as("ts"))
+        TextFunctions.nonEmptyTokens(lower(col("text"))).as("ts"))
     val docBg = toks.where(size(col("ts")) >= 2)
       .select(col("doc_id"), col("lang"), explode(expr(
         "transform(sequence(1, size(ts) - 1), " +
@@ -4079,9 +4078,7 @@ object TextQueries {
     // len(NULL) = NULL would diverge in the corpus-wide standardization
     // stats and silently shift the trained weights cross-engine; an
     // empty doc instead yields nw=0 → y=0, r*=0 in BOTH engines.
-    val toks = filter(
-      TextFunctions.tokenize(lower(coalesce(col("text"), lit("")))),
-      t => length(t) > 0)
+    val toks = TextFunctions.nonEmptyTokens(lower(coalesce(col("text"), lit(""))))
     docs.select(
         col("doc_id"),
         size(toks).cast("long").as("nw"),
@@ -4444,9 +4441,7 @@ object TextQueries {
     * n/2^16 bucket totals; level 2 is bucket-partitioned. */
   private def packOffsets(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = filter(
-      TextFunctions.tokenize(lower(coalesce(col("text"), lit("")))),
-      t => length(t) > 0)
+    val toks = TextFunctions.nonEmptyTokens(lower(coalesce(col("text"), lit(""))))
     val d = Tables(spark, dir).documents.select(
       col("doc_id"),
       (size(toks).cast("long") + 1L).as("len"),
@@ -4584,9 +4579,7 @@ object TextQueries {
     */
   private def repetitionFrame(docs: DataFrame): DataFrame = {
     val fp = 1L << 20
-    val toks = filter(
-      TextFunctions.tokenize(lower(coalesce(col("text"), lit("")))),
-      t => length(t) > 0)
+    val toks = TextFunctions.nonEmptyTokens(lower(coalesce(col("text"), lit(""))))
     val base = docs
       .select(col("doc_id"), toks.as("ts"))
       .select(col("doc_id"), size(col("ts")).cast("long").as("n_tokens"),
@@ -4836,8 +4829,7 @@ object TextQueries {
     val dd = Dedup.dedupSpans(surv.select(col("doc_id"), col("text")),
         segLen = 120)
       .where(col("n_kept") > 0)
-    val outToks = filter(split(trim(col("text_dedup")), "[\\t\\n\\x0B\\f\\r ]+"),
-      t => length(t) > 0)
+    val outToks = TextFunctions.nonEmptyTokens(col("text_dedup"))
     dd.join(surv.select(col("doc_id"), col("source")), "doc_id")
       .select(col("source"), size(outToks).as("n_toks"),
         length(col("text_dedup")).as("n_chars"))

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import graft.core.GraftSession
 import graft.core.QueryDef.{dec, dsum}
 import graft.operators.WordCount
 
@@ -283,7 +284,6 @@ object StreamOps {
   def runToMemory(spark: SparkSession, streamDf: DataFrame, name: String,
       mode: OutputMode = OutputMode.Complete,
       statePartitions: Option[Int] = None): DataFrame = {
-    val partsKey = "spark.sql.shuffle.partitions"
     // This runner always executes against a THROWAWAY temp checkpoint
     // (deleted at completion — nothing ever restarts from it), so the
     // checksum sidecar files Spark 4.1 writes per state-store delta buy
@@ -292,28 +292,18 @@ object StreamOps {
     // ChecksumCheckpointFileManager.awaitResult. Queries that keep a
     // DURABLE checkpoint (st19's restart drill, st31's foreachBatch
     // ingest) run their own writeStream and keep the session default ON.
-    val ckKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    val prevParts = spark.conf.get(partsKey)
-    val prevCk = spark.conf.getOption(ckKey)
-    statePartitions.foreach(n => spark.conf.set(partsKey, n.toString))
-    spark.conf.set(ckKey, "false")
-    val q =
-      try {
-        val started = streamDf.writeStream
-          .outputMode(mode)
-          .format("memory")
-          .queryName(name)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        started.awaitTermination()
-        started
-      } finally {
-        spark.conf.set(partsKey, prevParts)
-        prevCk match {
-          case Some(v) => spark.conf.set(ckKey, v)
-          case None    => spark.conf.unset(ckKey)
-        }
-      }
+    val confs = statePartitions.map(n => "spark.sql.shuffle.partitions" -> n.toString).toSeq :+
+      ("spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")
+    val q = GraftSession.withConf(spark, confs: _*) {
+      val started = streamDf.writeStream
+        .outputMode(mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      started.awaitTermination()
+      started
+    }
     try {
       val exec = q match {
         case w: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper =>

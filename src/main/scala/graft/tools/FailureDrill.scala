@@ -4,7 +4,6 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerExecutorAdded, SparkListenerExecutorRemoved}
-import org.apache.spark.sql.SparkSession
 
 /** Failure-injection drill for the reliable-checkpoint path (VERDICT r9
   * item 4): ReliableCheckpointSpec proves result PARITY between the
@@ -150,16 +149,15 @@ object FailureDrill {
     // checkout's build directories)
     System.setProperty("spark.test.home",
       sys.env.getOrElse("SPARK_HOME", "/opt/spark"))
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,2,1536]")
+    // the session every user runs (GraftSession), plus the drill's own
+    // cluster settings
+    val spark = graft.core.GraftSession.builder("local-cluster[2,2,1536]")
       .appName("graft-failure-drill")
       // ship the application classes to the forked executors: the sbt
       // run classpath is NOT propagated in local-cluster mode
       .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
       .config("spark.sql.shuffle.partitions", "8")
-      // match the judged sessions (GraftSession/Verify): the repo-wide
-      // fixed-point and hash-fold arithmetic contract is 64-bit wraparound
-      .config("spark.sql.ansi.enabled", "false")
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "8")
       .config("spark.graft.checkpoint.dir", ckptDir)
       // survive the kill: retry the stage/tasks instead of aborting fast
       .config("spark.task.maxFailures", "8")

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
-import graft.functions.GraftExtensions
+import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
+import org.apache.spark.sql.functions.{array, col, collate, lit, map}
+import graft.functions.{GraftExtensions, HashExprs, LayoutExprs, UnigramExprs, VectorExprs}
 
 class ExtensionsSpec extends SparkSpec {
   import spark.implicits._
@@ -60,6 +61,62 @@ class ExtensionsSpec extends SparkSpec {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     assert(spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum") ==
       (cpus * 2).toString)
+  }
+
+  test("every native expression checks its input types at analysis, with no implicit cast") {
+    GraftExtensions.register(spark)
+    def mistyped(analyze: => Any): Unit = {
+      val e = intercept[AnalysisException](analyze)
+      assert(e.getCondition.startsWith("DATATYPE_MISMATCH"), e.getMessage)
+    }
+    // one mistyped argument per registered SQL function (array<int> is not
+    // array<bigint>: no implicit cast)
+    val sqlCalls = Map(
+      "fnv64" -> "fnv64(1)",
+      "simhash64" -> "simhash64(array(1))",
+      "minhash_sig" -> "minhash_sig(array(1L), 4)",
+      "minhash_buckets" -> "minhash_buckets(array(1L), 2, 2)",
+      "first_eq_index" -> "first_eq_index(array(1), array(1L))",
+      "sorted_intersect_size" -> "sorted_intersect_size(array(1L), array('a'))",
+      "cosine_sim" -> "cosine_sim(array(1L), array(1.0d))",
+      "srp_bucket" -> "srp_bucket(array(1.0f), 4, 0)",
+      "nfc_normalize" -> "nfc_normalize(array('a'))",
+      "word_tokens" -> "word_tokens(1)",
+      "winnow_fps" -> "winnow_fps('a b c', 3, 4)")
+    assert(sqlCalls.keySet == GraftExtensions.functions.map(_._1).toSet)
+    sqlCalls.values.foreach(call => mistyped(spark.sql(s"SELECT $call")))
+    // ... and per Column-only kernel
+    val row = spark.range(1).toDF("id")
+    Seq(
+      HashExprs.sortedJaccard(array(lit(1)), array(lit(1L))),
+      HashExprs.textMinhashBuckets(lit(1), 2, 2),
+      HashExprs.textTokenHashes(array(lit("a"))),
+      HashExprs.fnvMix64(lit(1L)),
+      VectorExprs.jlProject(array(lit(1L)), 2, 1),
+      LayoutExprs.zorder16(lit(1), col("id")),
+      LayoutExprs.hilbert16(col("id"), lit("a")),
+      UnigramExprs.viterbiSegment(lit("ab"), map(lit("a"), lit(1)), 4, 1000L)
+    ).foreach(c => mistyped(row.select(c)))
+    // a string of a non-default collation is not a string input
+    mistyped(spark.sql("SELECT fnv64(collate('a', 'UTF8_LCASE'))"))
+    mistyped(spark.sql("SELECT word_tokens(collate('a', 'UNICODE'))"))
+    mistyped(row.select(HashExprs.textTokenHashes(collate(lit("a b"), "UTF8_LCASE"))))
+
+    // today's inputs still analyze: a NOT NULL-element array<bigint> from
+    // text_token_hashes, array<double>, and map<string,bigint>
+    val docs = Seq((1L, "a b c"), (2L, "b c d")).toDF("id", "text")
+    val jac = docs.as("x").join(docs.as("y"), col("x.id") < col("y.id"))
+      .select(HashExprs.sortedJaccard(
+        HashExprs.textTokenHashes(col("x.text")), HashExprs.textTokenHashes(col("y.text"))))
+      .as[Double].head()
+    assert(jac == 0.5)
+    val cos = row.select(VectorExprs.cosineSim(
+      array(lit(3.0), lit(0.0)), array(lit(1.0), lit(0.0)))).as[Double].head()
+    assert(math.abs(cos - 1.0) < 1e-12)
+    val seg = row.select(UnigramExprs.viterbiSegment(lit("ab"),
+        map(lit("a"), lit(1L), lit("b"), lit(2L)), 4, 1000L).as("s"))
+      .select(col("s.best"), col("s.pieces")).as[(Long, Seq[String])].head()
+    assert(seg == ((3L, Seq("a", "b"))))
   }
 
   test("non-literal parameters to parameterized functions are rejected") {
